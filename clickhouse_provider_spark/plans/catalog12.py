@@ -165,16 +165,15 @@ def q_covar_corr_matrix(spark, t):
     # scans are ONE task — the old 3-scan union got 3 parallel tasks for
     # the same total work, which is exactly why one-pass measured slower
     # locally. spread_scan (guide §2.5; the r14 #3/#4 remedy) hash-
-    # repartitions the narrow (key + 3 measures) projection only when
-    # the scan under-splits, so the partial aggregation runs on all
+    # repartitions the narrow 3-measure projection (keyed on the measures
+    # themselves: the query reads no other column) only when the scan
+    # under-splits, so the partial aggregation runs on all
     # cores locally and the repartition is a NO-OP on well-split
     # production scans — keeping the structural 3-scans→1 win at scale.
     from clickhouse_provider_spark.operators import spread_scan
 
     measures = sorted({c for xy in _PAIRS for c in xy})
-    li = spread_scan(
-        t["lineitem"].select("l_orderkey", *measures), "l_orderkey"
-    )
+    li = spread_scan(t["lineitem"].select(*measures), *measures)
     aggs = [F.count(F.lit(1)).alias("n")]
     for c in measures:
         dc = dec(F.col(c))

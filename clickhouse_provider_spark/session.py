@@ -9,6 +9,12 @@ chosen so the same logical plans scale to a multi-executor cluster:
   package is Arrow-batched, never row-at-a-time.
 - UTC session timezone — the reference stores nanosecond UTC timestamps
   (reference README.md:121 ``DateTime64(9,'UTC')``).
+- Driver heap (``spark.driver.memory``) from ``SPARK_DRIVER_MEM`` when it
+  is set; otherwise a quarter of the host's memory, capped at 48g
+  (:func:`driver_memory`). A quarter is the JVM's own default maximum heap
+  (``-XX:MaxRAMPercentage=25``), and like the JVM it reads the cgroup
+  memory limit instead of physical memory when one is set, so the default
+  heap never outgrows the machine or container it runs in.
 """
 
 from __future__ import annotations
@@ -18,6 +24,39 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+#: cgroup v2 and v1 memory-limit files; "max" or a near-2^63 value: no limit
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def host_memory_bytes() -> int:
+    """Memory this process may use: physical memory, or the cgroup memory
+    limit when one is set below it."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():
+            total = min(total, int(limit))
+    return total
+
+
+def driver_memory(host_bytes: int | None = None) -> str:
+    """The ``spark.driver.memory`` value: ``SPARK_DRIVER_MEM`` when set,
+    else a quarter of ``host_bytes`` (default :func:`host_memory_bytes`)
+    in MiB, capped at 48g — so hosts with 192 GB or more get exactly 48g."""
+    override = os.environ.get("SPARK_DRIVER_MEM")
+    if override:
+        return override
+    if host_bytes is None:
+        host_bytes = host_memory_bytes()
+    return f"{min(host_bytes // 4 // 2**20, 48 * 1024)}m"
 
 
 def get_spark(
@@ -80,7 +119,7 @@ def get_spark(
         # timestamp_micros(ns DIV 1000) when calendar semantics are needed.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.local.dir", os.environ.get("SPARK_LOCAL_DIRS", "/tmp"))
         .config(
             "spark.sql.warehouse.dir",
