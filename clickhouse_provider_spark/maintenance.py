@@ -34,7 +34,8 @@ from glob import glob
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from clickhouse_provider_spark.schemas import BLOOM_COLUMNS, SORT_KEYS
+from clickhouse_provider_spark.schemas import SORT_KEYS
+from clickhouse_provider_spark.storage import with_skip_indexes
 
 TARGET_FILE_BYTES = 128 * 1024 * 1024  # cluster-friendly scan unit
 
@@ -97,9 +98,7 @@ def compact_table(
             .sortWithinPartitions(*key)
             .write.mode("overwrite")
         )
-        for col in BLOOM_COLUMNS.get(name, []):
-            writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
-        writer.parquet(tmp)
+        with_skip_indexes(writer, name).parquet(tmp)
         # drop spark's _SUCCESS marker before the swap so the staged dir is
         # final the moment it's renamed into place
         marker = os.path.join(tmp, "_SUCCESS")
@@ -188,9 +187,7 @@ def reorg_repair(
             kept = spark.read.parquet(bdir).filter(F.col(height_col) < fork_height)
             tmp = os.path.join(warehouse, f"_reorg_{name}_{uuid.uuid4().hex[:8]}")
             writer = kept.sortWithinPartitions(*key).write.mode("overwrite")
-            for col in BLOOM_COLUMNS.get(name, []):
-                writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
-            writer.parquet(tmp)
+            with_skip_indexes(writer, name).parquet(tmp)
             marker = os.path.join(tmp, "_SUCCESS")
             if os.path.exists(marker):
                 os.remove(marker)
@@ -357,9 +354,7 @@ def write_zordered(
         .drop("__z")
         .write.mode("overwrite")
     )
-    for col in bloom_cols or []:
-        writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
-    writer.parquet(path)
+    with_skip_indexes(writer, bloom_cols).parquet(path)
     return bounds
 
 

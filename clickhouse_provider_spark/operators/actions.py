@@ -360,12 +360,16 @@ def extract_data(units: DataFrame) -> DataFrame:
     )
 
 
-def extract_tables(blocks: DataFrame) -> dict[str, DataFrame]:
+def extract_tables(blocks: DataFrame, track: list | None = None) -> dict[str, DataFrame]:
     """Full actions-mode fan-out: one pass over the unified receipt units,
     three projections. ``units`` is persisted — all three tables are
     separate write actions over it, and without the persist each one
-    re-explodes the block tree."""
+    re-explodes the block tree. Pass ``track`` (a list) to receive it and
+    unpersist after the writes (same contract as
+    ``transactions.assemble_from_parts``)."""
     units = receipt_units(blocks).persist()
+    if track is not None:
+        track.append(units)
     return {
         "actions": extract_actions(units),
         "events": extract_events(units),

@@ -450,15 +450,17 @@ def _improved_outcome(eo: F.Column, block_timestamp: F.Column, block_height: F.C
     )
 
 
-def assemble(blocks: DataFrame) -> dict[str, DataFrame]:
+def assemble(blocks: DataFrame, track: list | None = None) -> dict[str, DataFrame]:
     """Full transactions-mode fan-out. Returns the 5 tables plus the
     ``incomplete`` relation (txs whose receipt closure isn't finished in
-    this batch — the reference would keep them in TxCache)."""
+    this batch — the reference would keep them in TxCache). ``track``:
+    see :func:`assemble_from_parts`."""
     out = assemble_from_parts(
         tx_seeds(blocks),
         outcome_units(blocks),
         data_receipt_units(blocks),
         block_rows(blocks).select("block_height", "block_hash", "block_timestamp"),
+        track=track,
     )
     out["blocks"] = block_rows(blocks)
     return out
@@ -477,14 +479,15 @@ def assemble_from_parts(
     block a tx may span (streaming reads it from the blocks table).
 
     Shared intermediates (the receipt→tx mapping, the consumed-data
-    relation, the complete-tx seed slice) are persisted MEMORY_AND_DISK:
-    every returned table is a separate action over them.
+    relation, the complete-tx seed slice, and :func:`fan_out`'s correlated
+    units) are persisted MEMORY_AND_DISK: every returned table is a
+    separate action over them.
 
     Cache lifecycle (ADVICE r10, same contract as
     ``dedup.jaccard_pairs``): pass ``track`` (a list) to receive every
     persisted intermediate and unpersist after the consuming actions —
     long-running callers (streaming/pipeline.py's per-micro-batch body,
-    the bench loop) MUST, or the CacheManager accumulates three cached
+    the bench loop) MUST, or the CacheManager accumulates four cached
     plans per batch for the life of the session. One-shot batch callers
     may omit ``track``; their caches die with the session."""
     mapping = receipt_to_tx(seeds, outcomes).persist()
@@ -547,6 +550,7 @@ def assemble_from_parts(
         mapped.filter(F.col("tx_hash").isNotNull()),
         consumed_data,
         block_info,
+        track=track,
     )
     out["incomplete"] = incomplete
     # the already-persisted receipt→tx closure, exposed so callers
@@ -560,6 +564,7 @@ def fan_out(
     mapped_units: DataFrame,
     consumed_data: DataFrame,
     block_info: DataFrame,
+    track: list | None = None,
 ) -> dict[str, DataFrame]:
     """The 4-table fan-out over already-correlated units of COMPLETE txs
     (reference commit path, transactions.rs:354-441). Shared by the batch/
@@ -572,6 +577,8 @@ def fan_out(
     ``consumed_data``: one row per (consumer, data_id) dependency with the
     consumer's sort key (block_height, shard_pos, pos, dep_pos), the
     matched data receipt's ``receipt_id``/``receipt`` (null when missing).
+    ``track``: receives the persisted correlated units, as in
+    :func:`assemble_from_parts`.
     """
     done = complete_txs.select(
         "tx_hash", "tx_block_height", "tx_block_hash", "tx_block_timestamp", "signer_id"
@@ -581,6 +588,8 @@ def fan_out(
     # action reuses them instead of re-running the upstream subgraph per
     # table (measured ~2x on the full fan-out)
     m = mapped_units.join(done, "tx_hash", "inner").persist()
+    if track is not None:
+        track.append(m)
 
     # ---- receipt_txs: action receipts + attached data receipts ----------
     receipt_txs = m.select(

@@ -8,14 +8,20 @@ Mapping of each storage-level mechanism:
   sortWithinPartitions: range scans prune whole buckets (partition
   pruning) and row groups (parquet min/max on the sorted key)
 - ``minmax`` skip index       → parquet column statistics (automatic)
-- ``bloom_filter`` skip index → parquet bloom filters, enabled per column
-  at write (``parquet.bloom.filter.enabled#col``)
+- ``bloom_filter`` skip index → adaptive parquet bloom filters, sized to
+  the data (`with_skip_indexes`, shared by every writer here and in
+  maintenance.py): each column chunk keeps the smallest of 10 candidate
+  filters (1 MB down by halves) whose capacity at fpp 0.01 covers the
+  distinct values it saw, so small chunks carry KB filters, not 1 MB
 - ``set(0)`` index            → dictionary encoding + stats (automatic on
   low-cardinality strings)
 - ``ReplacingMergeTree``      → append-only writes + dedup-on-read view
   (`read_table`): last-write-wins on the sort key, exactly the reference's
   crash-replay idempotency (SAFE_CATCH_UP_OFFSET re-ingest collapses)
 - LZ4 transport               → zstd parquet pages (session default)
+
+A table's schema is kept once in a ``_schema.json`` sidecar, so a table
+written only from empty frames (no parquet files) still reads, as empty.
 
 At 100 TB: bucket size keeps per-partition data at file-count sanity;
 writes of a height range touch only their buckets, and the dedup view's
@@ -25,10 +31,14 @@ the full table.
 
 from __future__ import annotations
 
+import json
 import os
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window as W
 
 from clickhouse_provider_spark.schemas import BLOOM_COLUMNS, SORT_KEYS
@@ -46,6 +56,40 @@ PARTITION_HEIGHT = {
     "receipt_txs": "tx_block_height",
     "blocks": "block_height",
 }
+
+
+#: per-table schema record; the underscore prefix keeps it out of
+#: parquet partition discovery
+SCHEMA_SIDECAR = "_schema.json"
+
+#: candidate filters per bloom column in adaptive mode, 1 MB down by
+#: halves: parquet's default of 5 stops at 64 KB, 10 reaches 2 KB
+BLOOM_CANDIDATES = 10
+
+
+def with_skip_indexes(
+    writer: DataFrameWriter, table_or_cols: str | list[str] | None
+) -> DataFrameWriter:
+    """Put the ``bloom_filter`` skip indexes on ``writer``: a parquet bloom
+    filter per column of ``schemas.BLOOM_COLUMNS[table]`` (or of an
+    explicit column list), sized to each chunk's distinct values.
+
+    Without a size hint parquet-mr allocates its 1 MB maximum for every
+    bloom column of every file. Adaptive mode keeps ``BLOOM_CANDIDATES``
+    filters while writing and stores the smallest whose capacity covers
+    the chunk. It is a file-wide option: parquet-mr ignores it with a
+    ``#col`` suffix."""
+    cols = table_or_cols
+    if isinstance(cols, str):
+        cols = BLOOM_COLUMNS.get(cols, [])
+    if not cols:
+        return writer
+    writer = writer.option("parquet.bloom.filter.adaptive.enabled", "true")
+    for col in cols:
+        writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true").option(
+            f"parquet.bloom.filter.candidates.number#{col}", str(BLOOM_CANDIDATES)
+        )
+    return writer
 
 
 def write_table(
@@ -66,18 +110,46 @@ def write_table(
         .write.mode(mode)
         .partitionBy("height_bucket")
     )
-    for col in BLOOM_COLUMNS.get(name, []):
-        writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
-    writer.parquet(path)
+    with_skip_indexes(writer, name).parquet(path)
+    _record_schema(df, path)
     return path
+
+
+def _record_schema(df: DataFrame, path: str) -> None:
+    """Keep ``df``'s schema next to the table, once per table: a write of
+    an empty frame leaves no parquet file to infer it from. Written to a
+    temp name and renamed, so concurrent writers never leave half a file."""
+    sidecar = os.path.join(path, SCHEMA_SIDECAR)
+    if os.path.exists(sidecar):
+        return
+    os.makedirs(path, exist_ok=True)
+    tmp = f"{sidecar}.{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w") as fh:
+        fh.write(df.schema.json())
+    os.replace(tmp, sidecar)
+
+
+def _scan(spark: SparkSession, path: str) -> DataFrame:
+    """The table's raw parquet scan; an empty frame of the recorded
+    schema when the table has no data files yet."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as exc:
+        sidecar = os.path.join(path, SCHEMA_SIDECAR)
+        if exc.getCondition() != "UNABLE_TO_INFER_SCHEMA" or not os.path.exists(sidecar):
+            raise
+        with open(sidecar) as fh:
+            schema = StructType.fromJson(json.load(fh))
+        return spark.read.schema(schema).parquet(path)
 
 
 def read_table(spark: SparkSession, warehouse: str, name: str) -> DataFrame:
     """Dedup-on-read view with ReplacingMergeTree semantics: one survivor
     per sort key (row_number over the key — at scale the window shuffles
-    by sort-key hash; only genuinely duplicated keys carry >1 row)."""
+    by sort-key hash; only genuinely duplicated keys carry >1 row). A
+    table written only from empty frames reads as empty."""
     path = os.path.join(warehouse, name)
-    df = spark.read.parquet(path).drop("height_bucket")
+    df = _scan(spark, path).drop("height_bucket")
     key = SORT_KEYS[name]
     w = W.partitionBy(*key).orderBy(*key)
     return (
@@ -106,10 +178,9 @@ def merge_table(
     observe a half-written table and a crashed merge leaves the original.
     """
     import shutil
-    import uuid
 
     path = os.path.join(warehouse, name)
-    before = spark.read.parquet(path).count()
+    before = _scan(spark, path).count()
     merged = read_table(spark, warehouse, name)
     tmp = os.path.join(warehouse, f"_merge_{name}_{uuid.uuid4().hex[:8]}")
     height_col = PARTITION_HEIGHT[name]
@@ -120,10 +191,9 @@ def merge_table(
         .write.mode("overwrite")
         .partitionBy("height_bucket")
     )
-    for col in BLOOM_COLUMNS.get(name, []):
-        writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
-    writer.parquet(tmp)
-    after = spark.read.parquet(tmp).count()
+    with_skip_indexes(writer, name).parquet(tmp)
+    _record_schema(merged, tmp)
+    after = _scan(spark, tmp).count()
     old = path + ".old"
     os.rename(path, old)
     os.rename(tmp, path)
@@ -147,7 +217,6 @@ def upsert_table(
     on sort-key collisions (ReplacingMergeTree "latest version" rule).
     """
     import shutil
-    import uuid
 
     height_col = PARTITION_HEIGHT[name]
     key = SORT_KEYS[name]
@@ -184,10 +253,8 @@ def upsert_table(
         .write.mode("overwrite")
         .partitionBy("height_bucket")
     )
-    for col in BLOOM_COLUMNS.get(name, []):
-        writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
-    writer.parquet(tmp)
-    os.makedirs(path, exist_ok=True)  # first write: table root may not exist
+    with_skip_indexes(writer, name).parquet(tmp)
+    _record_schema(new_rows, path)  # first write: creates the table root
     for b in buckets:
         dst = os.path.join(path, f"height_bucket={b}")
         src = os.path.join(tmp, f"height_bucket={b}")
@@ -205,9 +272,14 @@ def ingest_batch(blocks: DataFrame, warehouse: str, mode: str = "append") -> dic
     from clickhouse_provider_spark.operators.transactions import assemble
 
     paths = {}
-    act = extract_tables(blocks)
-    txs = assemble(blocks)
+    track: list[DataFrame] = []  # the operators' cached intermediates
+    act = extract_tables(blocks, track=track)
+    txs = assemble(blocks, track=track)
     diagnostics = {"incomplete", "mapping"}
-    for name, df in {**act, **{k: v for k, v in txs.items() if k not in diagnostics}}.items():
-        paths[name] = write_table(df, warehouse, name, mode=mode)
+    try:
+        for name, df in {**act, **{k: v for k, v in txs.items() if k not in diagnostics}}.items():
+            paths[name] = write_table(df, warehouse, name, mode=mode)
+    finally:
+        for df in track:
+            df.unpersist()
     return paths

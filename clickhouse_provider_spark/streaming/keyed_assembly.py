@@ -669,9 +669,14 @@ def run_keyed_assembler(
         block_info = storage.read_table(spark, warehouse, "blocks").select(
             "block_height", "block_hash", "block_timestamp"
         )
-        out = TX.fan_out(seeds_c, m_units, consumed, block_info)
-        for name in ("transactions", "account_txs", "block_txs", "receipt_txs"):
-            storage.write_table(out[name], warehouse, name)
+        track: list[DataFrame] = []
+        out = TX.fan_out(seeds_c, m_units, consumed, block_info, track=track)
+        try:
+            for name in ("transactions", "account_txs", "block_txs", "receipt_txs"):
+                storage.write_table(out[name], warehouse, name)
+        finally:
+            for df in track:
+                df.unpersist()
 
     writer = (
         emitted.writeStream.foreachBatch(write_complete)

@@ -66,11 +66,16 @@ def run_actions_stream(
     parquet warehouse — the reference's deployment shape (click.rs)."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        for name, df in extract_tables(batch_df).items():
-            if sink is not None:
-                sink.insert_with_retry(df, name)
-            else:
-                storage.write_table(df, warehouse, name)
+        track: list[DataFrame] = []
+        try:
+            for name, df in extract_tables(batch_df, track=track).items():
+                if sink is not None:
+                    sink.insert_with_retry(df, name)
+                else:
+                    storage.write_table(df, warehouse, name)
+        finally:
+            for df in track:
+                df.unpersist()
 
     stream = block_stream(spark, src_path, max_files_per_trigger)
     writer = (
@@ -124,7 +129,7 @@ class TransactionsStream:
             "block_height", "block_hash", "block_timestamp"
         )
 
-        # track= (ADVICE r10): assemble_from_parts persists three shared
+        # track= (ADVICE r10): assemble_from_parts persists four shared
         # intermediates per call; a long-running stream must release them
         # per batch or the CacheManager grows without bound.
         track: list[DataFrame] = []

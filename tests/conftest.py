@@ -7,15 +7,26 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-# Put the test temp root on tmpfs (round 15, VERDICT task 1): every
-# structured-streaming micro-batch fsyncs its offset/commit/state files
-# under tmp_path, and on this host /tmp is virtio-DISK-backed while
-# /dev/shm is a 126 GiB tmpfs — the per-batch fsync wall was a large
-# slice of the 54-minute suite. Pure test infrastructure: product code
-# paths and the bench are untouched, and an explicit TMPDIR from the
-# caller still wins. The suite's artifacts are sf0.001-scale (MBs);
-# pytest's basetemp rotation (keeps 3) bounds tmpfs growth.
-if os.path.isdir("/dev/shm") and "TMPDIR" not in os.environ:
+# Put the test temp root on tmpfs: every structured-streaming micro-batch
+# fsyncs its offset/commit/state files under tmp_path, and with a
+# disk-backed /tmp that fsync wall was a large slice of the suite. An
+# explicit TMPDIR from the caller still wins. tmpfs pages are host memory,
+# and a finished run's basetemp stays there until pytest's rotation (keeps
+# 3) removes it, so the redirect is made only while /dev/shm has at least
+# SHM_MIN_FREE_BYTES free; otherwise the default temp dir is used.
+SHM_MIN_FREE_BYTES = 2 << 30
+
+
+def _shm_free_bytes() -> int:
+    st = os.statvfs("/dev/shm")
+    return st.f_bavail * st.f_frsize
+
+
+if (
+    os.path.isdir("/dev/shm")
+    and "TMPDIR" not in os.environ
+    and _shm_free_bytes() >= SHM_MIN_FREE_BYTES
+):
     _shm_tmp = "/dev/shm/pytest_tmp"
     os.makedirs(_shm_tmp, exist_ok=True)
     os.environ["TMPDIR"] = _shm_tmp

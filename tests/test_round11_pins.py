@@ -174,9 +174,10 @@ def test_cc_stats_are_per_call(spark):
 
 def test_assemble_from_parts_track_releases_caches(spark):
     """ADVICE r10, streaming-pipeline class: assemble_from_parts persists
-    three shared intermediates per call; with ``track`` the caller
-    (streaming/pipeline.py per micro-batch, bench_assembly per pass) can
-    release every one — no CacheManager entry survives."""
+    four shared intermediates per call (fan_out's included); with
+    ``track`` the caller (streaming/pipeline.py per micro-batch,
+    bench_assembly per pass) can release every one — no CacheManager
+    entry survives."""
     from clickhouse_provider_spark.operators import transactions as TX
     from clickhouse_provider_spark.schemas import BLOCK_SCHEMA
 
@@ -192,7 +193,7 @@ def test_assemble_from_parts_track_releases_caches(spark):
         track=track,
     )
     assert out["transactions"].count() > 0  # materialize the caches
-    assert len(track) == 3
+    assert len(track) == 4
     assert all(
         df.storageLevel.useMemory or df.storageLevel.useDisk for df in track
     )

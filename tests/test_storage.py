@@ -137,3 +137,47 @@ def test_upsert_into_nonexistent_table(spark, blocks, tmp_path_factory):
     got = storage.read_table(spark, wh, "blocks")
     assert got.count() == 5
     assert {r["block_height"] for r in got.select("block_height").collect()} == {100, 101, 102, 103, 104}
+
+
+def _cached_rdd_ids(spark) -> set:
+    """Persisted RDDs other than local checkpoints (the fixpoint's
+    checkpoints are released by the context cleaner once unreachable)."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()  # noqa: SLF001
+    return {k for k in rdds.keys() if not rdds[k].rdd().isCheckpointed()}
+
+
+def test_ingest_batch_releases_its_caches(spark, blocks, tmp_path_factory):
+    """The operators persist their shared intermediates for the table
+    writes; a commit unpersists them all before it returns, so repeated
+    commits do not grow the session's cache."""
+    wh = str(tmp_path_factory.mktemp("cache_wh"))
+    before = _cached_rdd_ids(spark)
+    for _ in range(2):
+        storage.ingest_batch(blocks, wh)
+        assert _cached_rdd_ids(spark) - before == set()
+
+
+def test_empty_table_reads_empty(spark, blocks, tmp_path_factory):
+    """A write of an empty frame leaves no parquet file; the table still
+    reads, as 0 rows with the written columns and types."""
+    from clickhouse_provider_spark.operators.transactions import block_rows
+
+    wh = str(tmp_path_factory.mktemp("empty_wh"))
+    empty = block_rows(blocks).limit(0)
+    storage.write_table(empty, wh, "blocks")
+    assert not glob.glob(f"{wh}/blocks/**/*.parquet", recursive=True)
+    got = storage.read_table(spark, wh, "blocks")
+    assert got.count() == 0
+    assert got.dtypes == empty.dtypes
+
+
+def test_serving_over_a_block_without_transactions(spark, blocks, tmp_path_factory):
+    """Block 104 has no transactions or receipts: every table but blocks
+    is written empty, and serving calls answer with no rows."""
+    from clickhouse_provider_spark.plans import serving
+
+    wh = str(tmp_path_factory.mktemp("cold_wh"))
+    storage.ingest_batch(blocks.filter(F.col("block.header.height") == 104), wh)
+    assert serving.tx_by_hash(spark, wh, "T1").count() == 0
+    assert serving.events_by_name(spark, wh, "nft_mint").count() == 0
+    assert storage.read_table(spark, wh, "blocks").count() == 1
