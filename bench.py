@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 from pathlib import Path
@@ -19,7 +20,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from clickhouse_provider_spark.plans import CATALOG
-from clickhouse_provider_spark.session import get_spark, load_tables
+from clickhouse_provider_spark.session import codegen_stats, get_spark, load_tables
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -332,6 +333,7 @@ def bench_assembly(spark, n_replicas: int | None = None) -> dict:
     assembly only."""
     from pyspark.sql import functions as F
 
+    from clickhouse_provider_spark.operators import release
     from clickhouse_provider_spark.operators import transactions as TX
     from clickhouse_provider_spark.schemas import BLOCK_SCHEMA
 
@@ -406,8 +408,7 @@ def bench_assembly(spark, n_replicas: int | None = None) -> dict:
             force(df)
         elapsed = time.perf_counter() - start
         rows = sum(df.count() for df in tables.values())
-        for df in list(tables.values()) + track:
-            df.unpersist()
+        release(list(tables.values()) + track)
         return elapsed, rows
 
     one_pass()  # codegen warmup, same discipline as the extraction half
@@ -425,6 +426,53 @@ def bench_assembly(spark, n_replicas: int | None = None) -> dict:
         "blocks_per_sec": round(n_blocks / elapsed, 1),
         "txs_per_sec": round(n_txs / elapsed, 1),
     }
+
+
+def run_identity() -> dict:
+    """The fields that tell two snapshots apart, and key the overwrite
+    guard (:func:`snapshot_path`):
+
+    - ``provenance``: which harness ran the bench (VERDICT r12 task 8,
+      default fixed r13→r14). The gate run committed as
+      BENCH_full_r{N}.json sets ``SPARK_GRAFT_BENCH_PROVENANCE``; the
+      official per-round re-run (BENCH_r{N}.json) does not, so the
+      default is 'unlabeled', a label no gate run uses.
+    - ``spark_cpus``: the cores the session ran on, ``SPARK_GRAFT_CPUS``
+      (32 when unset, as in ``session.get_spark``), which sizes
+      ``local[N]`` and the shuffle partitions; ``host.cpus`` is the
+      machine's count and can differ.
+    """
+    return {
+        "provenance": os.environ.get("SPARK_GRAFT_BENCH_PROVENANCE", "unlabeled"),
+        "spark_cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+    }
+
+
+def safe_suffix(text: str) -> str:
+    """``text`` reduced to ``[A-Za-z0-9_.-]`` (anything else becomes
+    ``_``), so a provenance label cannot leave the repo root or form an
+    awkward filename."""
+    return re.sub(r"[^A-Za-z0-9_.-]", "_", text)
+
+
+def snapshot_path(full: Path, out: dict) -> Path:
+    """Where a run's ``BENCH_full`` snapshot goes. A run may only
+    overwrite a snapshot with the same provenance AND the same Spark core
+    count; otherwise it writes a sibling named after both, so an 8-core
+    run cannot replace a 32-core snapshot and both runs survive on disk.
+    Unreadable or legacy files (no provenance) keep the old overwrite
+    behavior; a snapshot without a core count counts as a different key."""
+    try:
+        existing = json.loads(full.read_text())
+    except (OSError, ValueError):
+        return full
+    if not isinstance(existing, dict) or existing.get("provenance") is None:
+        return full
+    key = (out["provenance"], out["spark_cpus"])
+    if (existing["provenance"], existing.get("spark_cpus")) == key:
+        return full
+    suffix = safe_suffix(f"_{out['provenance']}_c{out['spark_cpus']}")
+    return full.with_name(full.stem + suffix + full.suffix)
 
 
 def host_fingerprint() -> dict:
@@ -484,11 +532,20 @@ def main() -> None:
     # repeats: transient contention then hits one *pass*, not one query's
     # whole sample set, so the median absorbs it.
     samples: dict[str, list[float]] = {n: [] for n in names}
+    # per sample: classes compiled and seconds spent compiling them, read
+    # from the JVM's codegen counters outside the timed region
+    codegen: dict[str, dict[str, list]] = {
+        n: {"compiles": [], "compile_s": []} for n in names
+    }
     for _ in range(max(1, REPS)):
         for name in names:
+            compiles0, compile_s0 = codegen_stats(spark)
             start = time.perf_counter()
             force(CATALOG[name].build(spark, tables))
             samples[name].append(time.perf_counter() - start)
+            compiles1, compile_s1 = codegen_stats(spark)
+            codegen[name]["compiles"].append(compiles1 - compiles0)
+            codegen[name]["compile_s"].append(round(compile_s1 - compile_s0, 3))
             # between timed regions: drop blocks the query leaked so the
             # next measurement starts from a clean executor heap (see
             # release_leaked_blocks — fixes the phantom md5-kernel
@@ -523,19 +580,12 @@ def main() -> None:
         "queries": timings,  # per-query MEDIAN of REPS samples
         "queries_min": mins,
         "queries_spread": spreads,  # max - min across samples
+        "queries_codegen": codegen,  # per sample, outside the timed total
         "reps": max(1, REPS),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "ingest": ingest,  # pipeline-half throughput (actions-mode DAG)
         "assembly": assembly,  # tx-assembly half (closure + fan-out)
-        # run provenance (VERDICT r12 task 8, default fixed r13→r14): the
-        # same CLI is run by two harnesses — the builder's gate run
-        # (committed as BENCH_full_r{N}.json, which sets the env var) and
-        # the driver's official per-round re-run (BENCH_r{N}.json, the
-        # canonical artifact — which does NOT set it, so the default must
-        # be honest: 'unlabeled', not 'builder-gate').
-        "provenance": os.environ.get(
-            "SPARK_GRAFT_BENCH_PROVENANCE", "unlabeled"
-        ),
+        **run_identity(),
         # host fingerprint (VERDICT r13 task 5): round-over-round bench
         # deltas have repeatedly been dominated by HOST drift (judge's
         # controlled A/B measured the same code 1.31x slower across
@@ -561,22 +611,14 @@ def main() -> None:
     if not os.environ.get("SPARK_GRAFT_BENCH_NO_PERSIST") and not os.environ.get(
         "SPARK_GRAFT_BENCH_QUERIES"
     ):
-        full = Path(__file__).resolve().parent / f"BENCH_full_r{current_round():02d}.json"
         # Gate-artifact protection (VERDICT r14 task 8): in round 14 the
-        # driver's re-run clobbered the committed builder-gate snapshot in
-        # the working tree — both harnesses share the filename. A run may
-        # only overwrite a snapshot whose recorded provenance matches its
-        # own; otherwise it writes a provenance-suffixed sibling so BOTH
-        # runs survive on disk. Unreadable/legacy files (no provenance)
-        # keep the old overwrite behavior.
-        try:
-            existing = json.loads(full.read_text()).get("provenance")
-        except (OSError, ValueError):
-            existing = None
-        if existing is not None and existing != out["provenance"]:
-            full = full.with_name(
-                full.stem + f"_{out['provenance']}" + full.suffix
-            )
+        # per-round re-run clobbered the committed gate snapshot in the
+        # working tree, as both harnesses share the filename; in round 15
+        # an 8-core run replaced the 32-core one. See snapshot_path.
+        full = snapshot_path(
+            Path(__file__).resolve().parent / f"BENCH_full_r{current_round():02d}.json",
+            out,
+        )
         try:
             full.write_text(json.dumps(out, indent=1) + "\n")
         except OSError:

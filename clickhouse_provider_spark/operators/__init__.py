@@ -6,6 +6,40 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
+def checkpoint(df: DataFrame, track: list | None = None) -> DataFrame:
+    """``df.localCheckpoint(eager=True)``, appended to ``track`` when one
+    is given, for :func:`release` to free."""
+    df = df.localCheckpoint(eager=True)
+    if track is not None:
+        track.append(df)
+    return df
+
+
+def checkpoint_rdd(df: DataFrame):
+    """The JVM RDD holding a ``localCheckpoint`` frame's blocks, or None
+    when ``df`` is not a checkpoint."""
+    plan = df._jdf.queryExecution().analyzed()  # noqa: SLF001
+    if plan.getClass().getSimpleName() != "LogicalRDD":
+        return None
+    rdd = plan.rdd()
+    return rdd if rdd.isCheckpointed() else None
+
+
+def release(track: list[DataFrame]) -> None:
+    """Free every intermediate an operator handed back through ``track=``:
+    unpersist the persisted frames and drop the blocks of local
+    checkpoints. ``df.unpersist()`` alone leaves a checkpoint's RDD
+    cached until the context cleaner happens to collect it.
+
+    Call only after the last action that reads them: a frame derived
+    from a released checkpoint can no longer be computed."""
+    for df in track:
+        df.unpersist()
+        rdd = checkpoint_rdd(df)
+        if rdd is not None:
+            rdd.unpersist(False)
+
+
 def spread_scan(df: DataFrame, *key_cols: str, n: int | None = None) -> DataFrame:
     """Raise the map-side parallelism of an UNDER-partitioned input.
 

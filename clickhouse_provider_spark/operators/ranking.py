@@ -199,7 +199,11 @@ def bucketed_cumsum(
       The expensive lineage is then evaluated ONCE (under the window),
       and the offsets subtree is the caller's cheap scan, running
       concurrently as the broadcast future. This is the preferred form
-      when an equivalent cheap source exists.
+      when an equivalent cheap source exists. Every (group, bucket) of
+      ``df`` with non-NULL group keys must have exactly ONE totals row:
+      a missing key or a duplicated key fails the query (``raise_error``
+      inside the plan — no extra job), where an inner offsets join would
+      silently drop or fan out rows.
     - ``single_pass=True``: shuffle ``df`` once by (group, bucket) and
       derive BOTH passes from that one exchange (AQE stage reuse; a
       pruning-defeating ``_keep`` aggregate keeps the two copies
@@ -274,7 +278,8 @@ def bucketed_cumsum(
             if rest
             else []
         )
-    if bucket_totals is not None:
+    checked = bucket_totals is not None
+    if checked:
         need = [*group_cols, "_bkt"] + [f"_bw{i}" for i in range(len(val_cols))]
         missing = [c for c in need if c not in bucket_totals.columns]
         if missing:
@@ -284,6 +289,11 @@ def bucketed_cumsum(
         # same NULL-key contract as the source-side filter above: a NULL
         # _bkt subtotal would sort first and leak into every offset
         sub = bucket_totals.select(*need).filter(F.col("_bkt").isNotNull())
+        # NULL group keys never match an offsets row (the self-derived
+        # path drops them in its equi-join too); filtered here so the
+        # missing-key check below sees only rows that can match
+        for c in group_cols:
+            b = b.filter(F.col(c).isNotNull())
     else:
         sub = b.groupBy(*group_cols, "_bkt").agg(
             *[F.sum(v).alias(f"_bw{i}") for i, v in enumerate(val_cols)],
@@ -292,6 +302,9 @@ def bucketed_cumsum(
     k = len(val_cols)
     if group_cols:
         wb = W.partitionBy(*group_cols).orderBy("_bkt")
+        if checked:  # _dup: the group's totals hold some bucket twice
+            wg = W.partitionBy(*group_cols)
+            dup = F.count(F.lit(1)).over(wg) > F.size(F.collect_set("_bkt").over(wg))
         offsets = sub.select(
             *group_cols,
             "_bkt",
@@ -300,6 +313,7 @@ def bucketed_cumsum(
                 for i in range(k)
             ],
             *(["_keep"] if keep_aggs else []),
+            *([dup.alias("_dup")] if checked else []),
         )
     else:
         # ungrouped: the bucket subtotals are BOUNDED (caller contract), so
@@ -355,10 +369,16 @@ def bucketed_cumsum(
                 ).alias("out"),
             ),
         )
-        offsets = packed.select(F.explode(fold["out"]).alias("_o")).select(
+        if checked:
+            dup = F.size(F.array_distinct(F.col("_a._bkt"))) < F.size("_a")
+        offsets = packed.select(
+            F.explode(fold["out"]).alias("_o"),
+            *([dup.alias("_dup")] if checked else []),
+        ).select(
             "_o._bkt",
             *[f"_o._off{i}" for i in range(k)],
             *(["_o._keep"] if keep_aggs else []),
+            *(["_dup"] if checked else []),
         )
     wl = W.partitionBy(*group_cols, "_bkt").orderBy(order_col)
     # offsets is |groups|x|buckets| rows — BOUNDED by the documented caller
@@ -385,6 +405,35 @@ def bucketed_cumsum(
             cond = cond & (F.col(c) == F.col(f"_r_{c}"))
         out = b.join(offsets, cond).drop(
             "_keep", *[f"_r_{c}" for c in [*group_cols, "_bkt"]]
+        )
+    elif checked:
+        # caller-supplied totals: a left join keeps the rows whose key has
+        # no totals row, and the filter fails the query on them or on a
+        # duplicated key (a filter is never pruned away, unlike a check
+        # folded into an output column the caller might not read)
+        offsets = offsets.withColumn("_hit", F.lit(True))
+        if broadcast_offsets:
+            offsets = F.broadcast(offsets)
+        out = (
+            b.join(offsets, [*group_cols, "_bkt"], "left")
+            .filter(
+                F.when(
+                    F.col("_hit").isNull(),
+                    F.raise_error(F.lit(
+                        "bucketed_cumsum: bucket_totals has no row for a"
+                        " (group, bucket) key of the input"
+                    )),
+                )
+                .when(
+                    F.col("_dup"),
+                    F.raise_error(F.lit(
+                        "bucketed_cumsum: bucket_totals has more than one row"
+                        " for a (group, bucket) key"
+                    )),
+                )
+                .otherwise(F.lit(True))
+            )
+            .drop("_hit", "_dup")
         )
     else:
         if broadcast_offsets:

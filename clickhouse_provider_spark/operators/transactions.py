@@ -37,6 +37,7 @@ from pyspark.sql.window import Window as W
 
 from clickhouse_provider_spark import schemas
 from clickhouse_provider_spark.functions import account_id_valid
+from clickhouse_provider_spark.operators import checkpoint
 
 POTENTIAL_ACCOUNT_ARGS = [  # reference transactions.rs:21-41
     "receiver_id",
@@ -291,32 +292,41 @@ def data_receipt_violations(blocks: DataFrame) -> DataFrame:
     )
 
 
-def receipt_to_tx(seeds: DataFrame, outcomes: DataFrame, max_iterations: int = 50) -> DataFrame:
+def receipt_to_tx(
+    seeds: DataFrame,
+    outcomes: DataFrame,
+    max_iterations: int = 50,
+    track: list | None = None,
+) -> DataFrame:
     """The transitive-closure fixpoint (module doc): (receipt_id, tx_hash)
     for every receipt reachable from a seed transaction.
 
     Each iteration is one shuffle join frontier⋈outcomes on receipt_id;
     localCheckpoint cuts the growing lineage. Iterations = receipt-DAG
-    depth (promise chains), independent of data volume."""
+    depth (promise chains), independent of data volume.
+
+    ``track`` (a list) receives every checkpoint made here, the returned
+    mapping included; free them with ``operators.release`` once the last
+    action over the mapping has run (its lineage ends at them)."""
     mapping = seeds.select(
         F.explode("seed_receipt_ids").alias("receipt_id"), "tx_hash"
     ).distinct()
     spawns = outcomes.select(
         "receipt_id", F.explode("spawned_receipt_ids").alias("child_id")
     )
-    frontier = mapping.localCheckpoint(eager=True)
+    frontier = checkpoint(mapping, track)
     mapping = frontier
     for _ in range(max_iterations):
-        children = (
+        children = checkpoint(
             frontier.join(spawns, "receipt_id")
             .select(F.col("child_id").alias("receipt_id"), "tx_hash")
             .distinct()
-            .join(mapping, ["receipt_id", "tx_hash"], "left_anti")
-            .localCheckpoint(eager=True)
+            .join(mapping, ["receipt_id", "tx_hash"], "left_anti"),
+            track,
         )
         if children.isEmpty():
             break
-        mapping = mapping.union(children).localCheckpoint(eager=True)
+        mapping = checkpoint(mapping.union(children), track)
         frontier = children
     return mapping
 
@@ -485,14 +495,17 @@ def assemble_from_parts(
 
     Cache lifecycle (ADVICE r10, same contract as
     ``dedup.jaccard_pairs``): pass ``track`` (a list) to receive every
-    persisted intermediate and unpersist after the consuming actions —
-    long-running callers (streaming/pipeline.py's per-micro-batch body,
-    the bench loop) MUST, or the CacheManager accumulates four cached
-    plans per batch for the life of the session. One-shot batch callers
-    may omit ``track``; their caches die with the session."""
-    mapping = receipt_to_tx(seeds, outcomes).persist()
-    if track is not None:
-        track.append(mapping)
+    persisted intermediate and every checkpoint of the
+    :func:`receipt_to_tx` fixpoint, and free them with
+    ``operators.release`` after the consuming actions — long-running
+    callers (streaming/pipeline.py's per-micro-batch body, the bench
+    loop) MUST, or the CacheManager accumulates four cached plans and
+    the block manager a few checkpoints per batch for the life of the
+    session. One-shot batch callers may omit ``track``; their caches die
+    with the session."""
+    # persist() returns the fixpoint's last checkpoint itself, which
+    # receipt_to_tx has already put on ``track``
+    mapping = receipt_to_tx(seeds, outcomes, track=track).persist()
 
     mapped = outcomes.join(mapping, "receipt_id", "left")
 

@@ -759,10 +759,19 @@ def q_spearman_rank_corr(spark, t):
     # future. The expensive collapse is then evaluated ONCE (under the
     # window join); executed plan drops from 4 lineitem scans to 3
     # cheap-by-width ones (plans/r15/spearman_rank_corr_*.txt).
-    totals = base.groupBy(
-        "l_returnflag",
-        F.floor(F.col("l_extendedprice") / F.lit(4096.0)).alias("_bkt"),
-    ).agg(F.count(F.lit(1)).alias("_bw0"))
+    # Counted under the ranked side's filter: the midrank join is an
+    # inner equi-join, so rows with a NULL flag or quantity never reach
+    # ``g`` and must not reach the totals either.
+    totals = (
+        base.filter(
+            F.col("l_returnflag").isNotNull() & F.col("l_quantity").isNotNull()
+        )
+        .groupBy(
+            "l_returnflag",
+            F.floor(F.col("l_extendedprice") / F.lit(4096.0)).alias("_bkt"),
+        )
+        .agg(F.count(F.lit(1)).alias("_bw0"))
+    )
     g2 = bucketed_cumsum(
         g,
         "l_extendedprice",

@@ -15,6 +15,15 @@ chosen so the same logical plans scale to a multi-executor cluster:
   (``-XX:MaxRAMPercentage=25``), and like the JVM it reads the cgroup
   memory limit instead of physical memory when one is set, so the default
   heap never outgrows the machine or container it runs in.
+- Codegen cache of :data:`CODEGEN_CACHE_ENTRIES` (1000) compiled classes
+  (``spark.sql.codegen.cache.maxEntries``, Spark's default is 100). With
+  100 entries every warm ``storage.ingest_batch`` commit compiled about
+  240 classes: each commit evicted the classes the next one needed.
+  Measured working sets (4 cores, cache far above need): a backfill round
+  of warm-up, two commits and 30 serving calls compiles 409 distinct
+  classes (491 with its cold-start reads and output checks); a tail drain
+  of the actions and keyed transactions daemons, 342. The second commit
+  then compiles 34 classes instead of 240.
 """
 
 from __future__ import annotations
@@ -24,6 +33,11 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+#: ``spark.sql.codegen.cache.maxEntries``: at least twice the largest
+#: measured working set, 491 distinct classes for a backfill round
+#: (warm-up, two commits, serving, checks; a tail drain needs 342)
+CODEGEN_CACHE_ENTRIES = 1000
 
 #: cgroup v2 and v1 memory-limit files; "max" or a near-2^63 value: no limit
 _CGROUP_MEMORY_LIMITS = (
@@ -57,6 +71,17 @@ def driver_memory(host_bytes: int | None = None) -> str:
     if host_bytes is None:
         host_bytes = host_memory_bytes()
     return f"{min(host_bytes // 4 // 2**20, 48 * 1024)}m"
+
+
+def codegen_stats(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, seconds spent compiling them) by this JVM's
+    whole-stage and expression code generator so far. A class served
+    from the codegen cache is not counted, so the difference across a
+    call is what the call compiled."""
+    jvm = spark._jvm  # noqa: SLF001
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return int(compiles.getCount()), codegen.compileTime() / 1e9
 
 
 def get_spark(
@@ -120,6 +145,9 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.driver.memory", driver_memory())
+        # static conf: read once when the session starts, so it must go on
+        # the builder (module docstring has the measured working sets)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.local.dir", os.environ.get("SPARK_LOCAL_DIRS", "/tmp"))
         .config(
             "spark.sql.warehouse.dir",

@@ -268,11 +268,15 @@ def upsert_table(
 def ingest_batch(blocks: DataFrame, warehouse: str, mode: str = "append") -> dict[str, str]:
     """Full batch ingest: both pipeline modes → all 8 tables (the
     reference runs them as two daemons over the same stream)."""
+    from clickhouse_provider_spark.operators import release
     from clickhouse_provider_spark.operators.actions import extract_tables
     from clickhouse_provider_spark.operators.transactions import assemble
 
     paths = {}
-    track: list[DataFrame] = []  # the operators' cached intermediates
+    # the operators' cached intermediates and the fixpoint's checkpoints;
+    # the persisted mapping's lineage ends at those checkpoints, so they
+    # are released only after the last write
+    track: list[DataFrame] = []
     act = extract_tables(blocks, track=track)
     txs = assemble(blocks, track=track)
     diagnostics = {"incomplete", "mapping"}
@@ -280,6 +284,5 @@ def ingest_batch(blocks: DataFrame, warehouse: str, mode: str = "append") -> dic
         for name, df in {**act, **{k: v for k, v in txs.items() if k not in diagnostics}}.items():
             paths[name] = write_table(df, warehouse, name, mode=mode)
     finally:
-        for df in track:
-            df.unpersist()
+        release(track)
     return paths

@@ -100,6 +100,7 @@ def has_tws_protocol() -> bool:
     return ensure_protobuf(for_workers=True)
 
 from clickhouse_provider_spark import storage
+from clickhouse_provider_spark.operators import checkpoint, release
 from clickhouse_provider_spark.operators import transactions as TX
 from clickhouse_provider_spark.schemas import BLOCK_SCHEMA
 from clickhouse_provider_spark.sources import block_stream
@@ -158,6 +159,15 @@ class KeyedRouter:
         return df if df is not None else default
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        # the batch's checkpoints; the published state's lineage ends at
+        # them, so they are released only after the publish
+        track: list[DataFrame] = []
+        try:
+            self._route(batch_df, batch_id, track)
+        finally:
+            release(track)
+
+    def _route(self, batch_df: DataFrame, batch_id: int, track: list) -> None:
         spark = self.spark
         seeds_b = TX.tx_seeds(batch_df)
         outs_b = TX.outcome_units(batch_df)
@@ -167,9 +177,10 @@ class KeyedRouter:
         routing = self._read(
             "routing", batch_id, spark.createDataFrame([], ROUTING_SCHEMA)
         )
-        outs_all = self._read("outcome_wait", batch_id, outs_b.limit(0)).unionByName(
-            outs_b
-        ).localCheckpoint(eager=True)
+        outs_all = checkpoint(
+            self._read("outcome_wait", batch_id, outs_b.limit(0)).unionByName(outs_b),
+            track,
+        )
         data_wait = self._read("data_wait", batch_id, data_b.limit(0))
         consume_wait = self._read(
             "consume_wait", batch_id, spark.createDataFrame([], CONSUME_SCHEMA)
@@ -184,24 +195,24 @@ class KeyedRouter:
         spawns = outs_all.select(
             "receipt_id", F.explode("spawned_receipt_ids").alias("child_id")
         )
-        mapping = routing.unionByName(seed_map).localCheckpoint(eager=True)
+        mapping = checkpoint(routing.unionByName(seed_map), track)
         new_maps = seed_map
         frontier = mapping
         for _ in range(50):
-            children = (
+            children = checkpoint(
                 frontier.join(spawns, "receipt_id")
                 .select(F.col("child_id").alias("receipt_id"), "tx_hash")
                 .distinct()
-                .join(mapping, ["receipt_id", "tx_hash"], "left_anti")
-                .localCheckpoint(eager=True)
+                .join(mapping, ["receipt_id", "tx_hash"], "left_anti"),
+                track,
             )
             if children.isEmpty():
                 break
-            mapping = mapping.union(children).localCheckpoint(eager=True)
+            mapping = checkpoint(mapping.union(children), track)
             new_maps = new_maps.union(children)
             frontier = children
 
-        mapped_exec = outs_all.join(mapping, "receipt_id").localCheckpoint(eager=True)
+        mapped_exec = checkpoint(outs_all.join(mapping, "receipt_id"), track)
         outcome_wait2 = outs_all.join(mapping, "receipt_id", "left_anti")
         routing2 = mapping.join(
             mapped_exec.select("receipt_id"), "receipt_id", "left_anti"
@@ -215,10 +226,8 @@ class KeyedRouter:
             "pos",
             F.posexplode("input_data_ids").alias("dep_pos", "data_id"),
         ).select(*CONSUME_SCHEMA.replace(" string", "").replace(" long", "").replace(" int", "").split(", "))
-        consumes_all = consume_wait.unionByName(consume_new).localCheckpoint(eager=True)
-        data_all = TX.dedup_data_units(
-            data_wait.unionByName(data_b)
-        ).localCheckpoint(eager=True)
+        consumes_all = checkpoint(consume_wait.unionByName(consume_new), track)
+        data_all = checkpoint(TX.dedup_data_units(data_wait.unionByName(data_b)), track)
         matched = consumes_all.join(
             data_all.select("data_id", "receipt_id", "receipt"), "data_id"
         )
@@ -675,8 +684,7 @@ def run_keyed_assembler(
             for name in ("transactions", "account_txs", "block_txs", "receipt_txs"):
                 storage.write_table(out[name], warehouse, name)
         finally:
-            for df in track:
-                df.unpersist()
+            release(track)
 
     writer = (
         emitted.writeStream.foreachBatch(write_complete)

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clickhouse_provider_spark import storage
+from clickhouse_provider_spark.operators import release
 from clickhouse_provider_spark.operators import transactions as TX
 from clickhouse_provider_spark.operators.actions import extract_tables
 from clickhouse_provider_spark.sources import block_stream
@@ -74,8 +75,7 @@ def run_actions_stream(
                 else:
                     storage.write_table(df, warehouse, name)
         finally:
-            for df in track:
-                df.unpersist()
+            release(track)
 
     stream = block_stream(spark, src_path, max_files_per_trigger)
     writer = (
@@ -130,8 +130,9 @@ class TransactionsStream:
         )
 
         # track= (ADVICE r10): assemble_from_parts persists four shared
-        # intermediates per call; a long-running stream must release them
-        # per batch or the CacheManager grows without bound.
+        # intermediates and checkpoints its fixpoint per call; a
+        # long-running stream must release them per batch or the cache
+        # grows without bound.
         track: list[DataFrame] = []
         out = TX.assemble_from_parts(
             seeds, outcomes, data_units, block_info, track=track
@@ -175,8 +176,7 @@ class TransactionsStream:
             {"seeds": state_seeds, "outcomes": state_outcomes, "data": state_data},
             batch_id,
         )
-        for df in track:  # publish was the last consuming action
-            df.unpersist()
+        release(track)  # publish was the last consuming action
 
 
 def _union(state: DataFrame | None, new: DataFrame) -> DataFrame:

@@ -370,3 +370,26 @@ def test_completed_tombstone_blocks_replayed_tail(spark, keyed_out, tmp_path_fac
     assert raw_after == raw_mid  # tombstones held: no re-emission
     # logical view still exactly the 3 txs
     assert storage.read_table(spark, keyed_out, "transactions").count() == 3
+
+
+def test_router_batch_releases_its_checkpoints(spark, tmp_path_factory):
+    """The router checkpoints its fixpoint rounds and carried state every
+    micro-batch; each batch releases them once its state is published,
+    so a long-running router holds no checkpoint blocks between batches."""
+    from clickhouse_provider_spark.schemas import BLOCK_SCHEMA
+    from clickhouse_provider_spark.streaming.keyed_assembly import KeyedRouter
+
+    def checkpoints() -> set:
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()  # noqa: SLF001
+        return {k for k in rdds.keys() if rdds[k].rdd().isCheckpointed()}
+
+    wh = str(tmp_path_factory.mktemp("wh_router_release"))
+    units = os.path.join(wh, "_tx_units")
+    os.makedirs(units)
+    router = KeyedRouter(spark, wh, units, os.path.join(wh, "_router_state"))
+    chain = FC.make_chain()
+    before = checkpoints()
+    for batch_id, part in enumerate((chain[:3], chain[3:])):
+        rows = spark.sparkContext.parallelize([json.dumps(b) for b in part], 1)
+        router.process_batch(spark.read.schema(BLOCK_SCHEMA).json(rows), batch_id)
+        assert checkpoints() - before == set()

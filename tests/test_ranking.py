@@ -208,3 +208,72 @@ def test_bucketed_cumsum_broadcast_opt_out(spark):
     a = {(r["g"], r["v"]): r["cum"] for r in bc.collect()}
     b = {(r["g"], r["v"]): r["cum"] for r in no_bc.collect()}
     assert a == b
+
+
+def _totals_case(spark):
+    """Two groups over buckets 0-4 of ``v``, and totals computed from them."""
+    from clickhouse_provider_spark.operators.ranking import bucketed_cumsum
+
+    rows = [(g, float(v), v % 3 + 1) for g in ("a", "b") for v in range(20)]
+    df = spark.createDataFrame(rows, "g string, v double, x long")
+    bkt = F.floor(F.col("v") / F.lit(4.0))
+    totals = df.groupBy("g", bkt.alias("_bkt")).agg(F.sum("x").alias("_bw0"))
+
+    def run(tot, group_cols=("g",)):
+        src = df if group_cols else df.where("g = 'a'")
+        return bucketed_cumsum(
+            src, "v", "x", bucket=bkt, group_cols=list(group_cols), out_col="c",
+            bucket_totals=tot,
+        )
+
+    return df, totals, run
+
+
+def test_bucket_totals_missing_key_raises(spark):
+    """A (group, bucket) of the input with no totals row must fail the
+    query; an inner offsets join would drop that bucket's rows."""
+    import pytest
+
+    df, totals, run = _totals_case(spark)
+    assert run(totals).count() == df.count()
+    holed = totals.where("NOT (g = 'b' AND _bkt = 2)")
+    with pytest.raises(Exception, match="bucket_totals has no row"):
+        run(holed).collect()
+    with pytest.raises(Exception, match="bucket_totals has no row"):
+        run(holed.where("g = 'a'").where("_bkt != 3").drop("g"), group_cols=()).count()
+
+
+def test_bucket_totals_duplicate_key_raises(spark):
+    """A (group, bucket) with two totals rows must fail the query; an inner
+    offsets join would fan that bucket's rows out (and the double
+    subtotal would shift every later offset)."""
+    import pytest
+
+    df, totals, run = _totals_case(spark)
+    doubled = totals.unionByName(totals.where("g = 'a' AND _bkt = 1"))
+    with pytest.raises(Exception, match="more than one row"):
+        run(doubled).count()
+    with pytest.raises(Exception, match="more than one row"):
+        run(doubled.where("g = 'a'").drop("g"), group_cols=()).collect()
+
+
+def test_spearman_ignores_null_quantity_rows(spark):
+    """spearman_rank_corr ranks only rows with a quantity (its midrank
+    join drops NULLs), so the price-rank totals must skip them too: NULL
+    quantity rows in a middle price bucket change nothing."""
+    from clickhouse_provider_spark.plans import CATALOG
+
+    rows = [
+        (flag, float((i * 7) % 11 + 1), float(1000 + 900 * i))
+        for flag in ("A", "N") for i in range(30)
+    ]
+    rows += [(flag, None, 9000.0 + j) for flag in ("A", "N") for j in range(5)]
+    li = spark.createDataFrame(
+        rows, "l_returnflag string, l_quantity double, l_extendedprice double"
+    )
+    spec = CATALOG["spearman_rank_corr"]
+    got = sorted(spec.build(spark, {"lineitem": li}).collect())
+    want = sorted(
+        spec.build(spark, {"lineitem": li.where("l_quantity IS NOT NULL")}).collect()
+    )
+    assert got == want

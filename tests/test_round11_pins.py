@@ -174,10 +174,12 @@ def test_cc_stats_are_per_call(spark):
 
 def test_assemble_from_parts_track_releases_caches(spark):
     """ADVICE r10, streaming-pipeline class: assemble_from_parts persists
-    four shared intermediates per call (fan_out's included); with
-    ``track`` the caller (streaming/pipeline.py per micro-batch,
-    bench_assembly per pass) can release every one — no CacheManager
-    entry survives."""
+    four shared intermediates per call (fan_out's included) and
+    checkpoints every round of the receipt fixpoint; with ``track`` the
+    caller (streaming/pipeline.py per micro-batch, bench_assembly per
+    pass) can release every one through ``operators.release`` — no
+    CacheManager entry and no checkpoint block survives."""
+    from clickhouse_provider_spark.operators import checkpoint_rdd, release
     from clickhouse_provider_spark.operators import transactions as TX
     from clickhouse_provider_spark.schemas import BLOCK_SCHEMA
 
@@ -193,15 +195,22 @@ def test_assemble_from_parts_track_releases_caches(spark):
         track=track,
     )
     assert out["transactions"].count() > 0  # materialize the caches
-    assert len(track) == 4
-    assert all(
-        df.storageLevel.useMemory or df.storageLevel.useDisk for df in track
-    )
-    for df in track:
-        df.unpersist(blocking=True)
+    persisted = {
+        id(df) for df in track if df.storageLevel.useMemory or df.storageLevel.useDisk
+    }
+    assert len(persisted) == 4
+    # the fixpoint's checkpoints: the seed frontier, each round's
+    # children and mapping (the returned mapping is also persisted)
+    rdds = [rdd for rdd in map(checkpoint_rdd, track) if rdd is not None]
+    assert len(rdds) >= 2
+    assert all(rdd.isCheckpointed() for rdd in rdds)
+    release(track)
     for df in track:
         lvl = df.storageLevel
         assert not (lvl.useMemory or lvl.useDisk or lvl.useOffHeap)
+    for rdd in rdds:
+        lvl = rdd.getStorageLevel()
+        assert not (lvl.useMemory() or lvl.useDisk() or lvl.useOffHeap())
 
 
 def test_ivfpq_topk_full_probe_equals_pq_topk(spark):

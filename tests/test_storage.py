@@ -139,22 +139,48 @@ def test_upsert_into_nonexistent_table(spark, blocks, tmp_path_factory):
     assert {r["block_height"] for r in got.select("block_height").collect()} == {100, 101, 102, 103, 104}
 
 
-def _cached_rdd_ids(spark) -> set:
-    """Persisted RDDs other than local checkpoints (the fixpoint's
-    checkpoints are released by the context cleaner once unreachable)."""
+def _persistent_rdd_ids(spark, checkpointed: bool) -> set:
+    """Persisted RDDs of the session: local checkpoints, or the rest."""
     rdds = spark.sparkContext._jsc.getPersistentRDDs()  # noqa: SLF001
-    return {k for k in rdds.keys() if not rdds[k].rdd().isCheckpointed()}
+    return {k for k in rdds.keys() if rdds[k].rdd().isCheckpointed() == checkpointed}
 
 
 def test_ingest_batch_releases_its_caches(spark, blocks, tmp_path_factory):
     """The operators persist their shared intermediates for the table
-    writes; a commit unpersists them all before it returns, so repeated
-    commits do not grow the session's cache."""
+    writes, and the receipt fixpoint checkpoints every round; a commit
+    releases both before it returns, so repeated commits grow neither
+    the session's cache nor its checkpointed blocks."""
     wh = str(tmp_path_factory.mktemp("cache_wh"))
-    before = _cached_rdd_ids(spark)
+    cached = _persistent_rdd_ids(spark, checkpointed=False)
+    checkpoints = _persistent_rdd_ids(spark, checkpointed=True)
     for _ in range(2):
         storage.ingest_batch(blocks, wh)
-        assert _cached_rdd_ids(spark) - before == set()
+        assert _persistent_rdd_ids(spark, checkpointed=False) - cached == set()
+        assert _persistent_rdd_ids(spark, checkpointed=True) - checkpoints == set()
+
+
+def test_repeated_commit_reuses_compiled_code(spark, blocks, tmp_path_factory):
+    """The same commit run twice compiles its classes once: the codegen
+    cache (session.CODEGEN_CACHE_ENTRIES) holds a commit's working set,
+    where Spark's default of 100 entries evicted it within the commit.
+
+    Whole-stage classes are named without their stage id for this test,
+    which changes their source, so the first commit compiles them anew
+    even when earlier tests in this JVM ran the same plans."""
+    from clickhouse_provider_spark.session import codegen_stats
+
+    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
+    try:
+        compiled = []
+        for i in range(2):
+            before, _ = codegen_stats(spark)
+            storage.ingest_batch(blocks, str(tmp_path_factory.mktemp(f"codegen_wh{i}")))
+            compiled.append(codegen_stats(spark)[0] - before)
+    finally:
+        spark.conf.unset("spark.sql.codegen.useIdInClassName")
+    first, second = compiled
+    assert first > 0
+    assert second < first / 10, compiled
 
 
 def test_empty_table_reads_empty(spark, blocks, tmp_path_factory):
