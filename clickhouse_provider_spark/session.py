@@ -95,14 +95,6 @@ def get_spark(
     On a real cluster ``master`` comes from spark-submit; locally we default
     to ``local[$SPARK_GRAFT_CPUS]``.
     """
-    # Activate the vendored protobuf shim (if any) BEFORE the gateway JVM
-    # launches: python workers inherit PYTHONPATH from the JVM environment,
-    # captured at JVM launch, so a shim activated here reaches workers and
-    # transformWithStateInPandas' state protocol can initialize. No-op when
-    # protobuf is properly installed (real clusters) or no bundle exists.
-    from clickhouse_provider_spark.vendor import ensure_protobuf
-
-    ensure_protobuf()
     # Driver JVM thread stack (round 15): Structured Streaming's stream
     # execution thread intermittently dies with a java.lang
     # .StackOverflowError whose entire 1024-frame dump is

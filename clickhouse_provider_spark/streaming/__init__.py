@@ -3,10 +3,8 @@
 from clickhouse_provider_spark.streaming.keyed_assembly import (
     run_keyed_assembler,
     run_keyed_router,
-    run_keyed_transactions,
 )
 from clickhouse_provider_spark.streaming.pipeline import (
-    TransactionsStream,
     run_actions_stream,
     run_transactions_stream,
 )
@@ -14,8 +12,6 @@ from clickhouse_provider_spark.streaming.pipeline import (
 __all__ = [
     "run_actions_stream",
     "run_transactions_stream",
-    "run_keyed_transactions",
     "run_keyed_router",
     "run_keyed_assembler",
-    "TransactionsStream",
 ]

@@ -1,6 +1,7 @@
 """Keyed-state streaming transaction assembly: the reference's TxCache
-(transactions.rs:569-575) as a ``transformWithStateInPandas`` operator
-(SURVEY §2A #22's named primitive).
+(transactions.rs:569-575) as an ``applyInPandasWithState`` operator, the
+pandas form of ``mapGroupsWithState`` that the package's other stateful
+streams (sessionize, funnel, heavy_hitters, enrich) use too.
 
 Two chained streaming stages connected by a parquet unit log:
 
@@ -46,16 +47,6 @@ that could never complete. Per-batch work is proportional to units
 arriving for touched keys; untouched in-flight txs sit in the state
 store and are never re-walked.
 
-Two interchangeable engines for stage 2 (selected at runtime):
-
-- ``transformWithStateInPandas`` (:class:`TxAssembler`) — the named
-  primitive (SURVEY §2A #22) with typed Value/List/Map state on RocksDB.
-  Its driver↔worker state protocol needs ``google.protobuf``, which this
-  container does not ship, so it is gated on a protobuf import check.
-- ``applyInPandasWithState`` (:func:`_assemble_fn`) — identical
-  semantics over the Arrow-encoded GroupState API (no protobuf); the
-  engine exercised by the tests here.
-
 **Stage 3 — fan-out** (foreachBatch over the assembler's output): rebuild
 the typed relations from the emitted units and run the SAME
 ``operators.transactions.fan_out`` the batch path uses → identical 5-table
@@ -75,31 +66,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 from pyspark.sql.types import StructType
 
-
-def has_tws_protocol() -> bool:
-    """``transformWithStateInPandas`` runs a driver-side Python state
-    server speaking protobuf (pyspark/sql/streaming/proto/StateMessage_pb2);
-    without ``google.protobuf`` the query crashes with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE before the first batch.
-    ``vendor.ensure_protobuf`` discovers a pure-python runtime bundled by
-    public SDKs on the host when pip/network are unavailable.
-
-    ``for_workers=True``: tws needs protobuf on the *python workers* too —
-    a vendored shim first activated after the JVM launched is driver-only
-    (workers' env snapshot predates the PYTHONPATH change), so report
-    unavailable and let ``engine="auto"`` fall back to apiws instead of
-    crashing mid-query."""
-    from clickhouse_provider_spark.vendor import ensure_protobuf
-
-    return ensure_protobuf(for_workers=True)
-
-from clickhouse_provider_spark import storage
+from clickhouse_provider_spark import operators, storage
 from clickhouse_provider_spark.operators import checkpoint, release
 from clickhouse_provider_spark.operators import transactions as TX
 from clickhouse_provider_spark.schemas import BLOCK_SCHEMA
@@ -225,7 +194,7 @@ class KeyedRouter:
             "shard_pos",
             "pos",
             F.posexplode("input_data_ids").alias("dep_pos", "data_id"),
-        ).select(*CONSUME_SCHEMA.replace(" string", "").replace(" long", "").replace(" int", "").split(", "))
+        ).select(*StructType.fromDDL(CONSUME_SCHEMA).fieldNames())
         consumes_all = checkpoint(consume_wait.unionByName(consume_new), track)
         data_all = checkpoint(TX.dedup_data_units(data_wait.unionByName(data_b)), track)
         matched = consumes_all.join(
@@ -305,116 +274,7 @@ class KeyedRouter:
         )
 
 
-class TxAssembler(StatefulProcessor):
-    """Stage 2: per-tx completion state (the TxCache pending-transaction
-    entry, transactions.rs:569-575) keyed by tx_hash.
-
-    ``ttl_ms`` (optional) is the reorg horizon: a key untouched that long
-    is evicted — a still-incomplete tx emits its buffered units as
-    ``expired_*`` rows (routed to the ``expired_tx_units`` dead-letter by
-    the fan-out stage), a completed tx's tombstone just vanishes. Without
-    a TTL both kinds of state accumulate for the stream's lifetime."""
-
-    def __init__(self, ttl_ms: int | None = None):
-        self.ttl_ms = ttl_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.handle = handle
-        self.counts = handle.getValueState(
-            "counts", "n_mapped long, n_exec long, n_deps long, n_data long, has_seed boolean"
-        )
-        self.units = handle.getListState("units", "kind string, unit_json string")
-        self.seen = handle.getMapState("seen", "k string", "v integer")
-        # latest-activity deadline: timers can't be unregistered ad hoc, so
-        # stale ones are recognized by firing before the current deadline
-        self.deadline = handle.getValueState("deadline", "ts long")
-
-    def _arm(self, timerValues) -> None:
-        if self.ttl_ms is None:
-            return
-        due = timerValues.getCurrentProcessingTimeInMs() + self.ttl_ms
-        self.deadline.update((due,))
-        self.handle.registerTimer(due)
-
-    def handleInputRows(self, key, rows, timerValues):
-        c = self.counts.get() if self.counts.exists() else None
-        n_mapped, n_exec, n_deps, n_data, has_seed = c or (0, 0, 0, 0, False)
-        if n_mapped == COMPLETED:
-            # tombstone: tx already emitted; a partial replay of older unit
-            # log files must not rebuild dangling state (e.g. exec units
-            # without their seed) that could never re-satisfy the gate
-            for _ in rows:
-                pass
-            self._arm(timerValues)  # replay activity extends the horizon
-            return
-        fresh: list[tuple[str, str]] = []
-        for pdf in rows:
-            for r in pdf.itertuples(index=False):
-                if self.seen.containsKey((r.dedup_key,)):
-                    continue  # unit-log replay (at-least-once appends)
-                self.seen.updateValue((r.dedup_key,), (1,))
-                if r.kind == "map":
-                    n_mapped += 1
-                elif r.kind == "exec":
-                    n_exec += 1
-                    n_deps += int(r.n_deps)
-                    fresh.append(("exec", r.unit_json))
-                elif r.kind == "data":
-                    n_data += 1
-                    fresh.append(("data", r.unit_json))
-                elif r.kind == "seed":
-                    has_seed = True
-                    fresh.append(("seed", r.unit_json))
-        if fresh:
-            self.units.appendList(fresh)
-        if has_seed and n_mapped > 0 and n_exec == n_mapped and n_data == n_deps:
-            # counts agree — cheap pre-check; confirm with the reorder-proof
-            # SET gate (module doc): mapped ids == executed ids, derived
-            # from the dedup keys already in state ("m:<id>" / "e:<id>").
-            mapped_ids, executed_ids = set(), set()
-            for (k,) in self.seen.keys():
-                if k.startswith("m:"):
-                    mapped_ids.add(k[2:])
-                elif k.startswith("e:"):
-                    executed_ids.add(k[2:])
-            complete = mapped_ids == executed_ids
-        else:
-            complete = False
-        if complete:
-            out = pd.DataFrame(
-                [(key[0], k, j) for k, j in self.units.get()],
-                columns=["tx_hash", "kind", "unit_json"],
-            )
-            self.counts.update((COMPLETED, 0, 0, 0, True))  # tombstone
-            self.units.clear()
-            self.seen.clear()
-            yield out
-        else:
-            self.counts.update((n_mapped, n_exec, n_deps, n_data, has_seed))
-        self._arm(timerValues)
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        dl = self.deadline.get() if self.deadline.exists() else None
-        if dl is None or expiredTimerInfo.getExpiryTimeInMs() < dl[0]:
-            return  # stale timer: newer activity re-armed a later deadline
-        c = self.counts.get() if self.counts.exists() else None
-        rows: list[tuple[str, str, str]] = []
-        if c is not None and c[0] != COMPLETED:
-            # incomplete past the reorg horizon: surface, don't swallow
-            rows = [(key[0], f"expired_{k}", j) for k, j in self.units.get()]
-        self.counts.clear()
-        self.units.clear()
-        self.seen.clear()
-        self.deadline.clear()
-        if rows:
-            yield pd.DataFrame(rows, columns=["tx_hash", "kind", "unit_json"])
-
-    def close(self) -> None:
-        pass
-
-
-# applyInPandasWithState twin of TxAssembler: one state tuple per tx_hash
-# (the TxCache pending-transaction entry) instead of typed handles.
+# one state tuple per tx_hash: the TxCache pending-transaction entry
 ASSEMBLE_STATE_SCHEMA = (
     "n_mapped long, n_exec long, n_deps long, n_data long, has_seed boolean, "
     "kinds array<string>, jsons array<string>, seen array<string>"
@@ -422,9 +282,9 @@ ASSEMBLE_STATE_SCHEMA = (
 
 
 def _make_assemble_fn(ttl_ms: int | None = None):
-    """applyInPandasWithState twin of TxAssembler, optionally with the same
-    reorg-horizon TTL (GroupState processing-time timeout: the runtime
-    itself tracks last-activity, so no explicit deadline state needed)."""
+    """The stage-2 state function (module doc), optionally with a
+    reorg-horizon TTL: a GroupState processing-time timeout, so the
+    runtime itself tracks each key's last activity."""
 
     def _assemble_fn(key, pdfs, state: GroupState):
         if state.hasTimedOut:
@@ -506,58 +366,6 @@ def _make_assemble_fn(ttl_ms: int | None = None):
     return _assemble_fn
 
 
-def run_keyed_transactions(
-    spark: SparkSession,
-    src_path: str,
-    warehouse: str,
-    checkpoint: str,
-    state_dir: str | None = None,
-    max_files_per_trigger: int = 100,
-    available_now: bool = True,
-    engine: str = "auto",
-    state_ttl_ms: int | None = None,
-):
-    """The full incremental transactions-mode daemon: router (stage 1) →
-    unit log → keyed assembler + fan-out (stages 2+3), chained under ONE
-    checkpoint root (``<checkpoint>/router`` and ``<checkpoint>/assembler``)
-    so stop/resume restarts both stages from where they left off.
-
-    With ``available_now`` the router drains fully before the assembler
-    starts (the assembler's file source only batches files that exist when
-    it plans); continuous mode runs both queries concurrently. Returns the
-    assembler's query with the router's attached as ``.router_query`` —
-    ``stop()``/``awaitTermination`` on the returned handle govern the
-    sink-side stage, the attribute the source-side one.
-
-    Per-batch work here is ∝ units arriving for touched keys (the
-    reference's per-block TxCache update, transactions.rs:354-369) — not
-    ∝ total in-flight history like the legacy
-    ``pipeline.TransactionsStream`` shape this replaces as default.
-    """
-    q1 = run_keyed_router(
-        spark,
-        src_path,
-        warehouse,
-        checkpoint=os.path.join(checkpoint, "router"),
-        state_dir=state_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        available_now=available_now,
-    )
-    if available_now:
-        q1.awaitTermination()
-    q2 = run_keyed_assembler(
-        spark,
-        warehouse,
-        checkpoint=os.path.join(checkpoint, "assembler"),
-        max_files_per_trigger=max_files_per_trigger,
-        available_now=available_now,
-        engine=engine,
-        state_ttl_ms=state_ttl_ms,
-    )
-    q2.router_query = q1
-    return q2
-
-
 def run_keyed_router(
     spark: SparkSession,
     src_path: str,
@@ -591,14 +399,9 @@ def run_keyed_assembler(
     units_dir: str | None = None,
     max_files_per_trigger: int = 100,
     available_now: bool = True,
-    engine: str = "auto",
     state_ttl_ms: int | None = None,
 ):
     """Stage 2+3: unit log → keyed completion → fan_out → 4 tables.
-
-    ``engine``: ``"tws"`` (transformWithStateInPandas + RocksDB),
-    ``"apiws"`` (applyInPandasWithState), or ``"auto"`` — tws when its
-    protobuf state protocol is importable, else apiws.
 
     ``state_ttl_ms``: reorg horizon after which an untouched key is
     evicted — a still-incomplete tx's buffered units land in the
@@ -607,31 +410,16 @@ def run_keyed_assembler(
     is dropped. Without it, per-key state grows with stream lifetime —
     fine for bounded replays/tests, wrong for a months-long tail at 100 TB.
     """
-    if engine == "auto":
-        engine = "tws" if has_tws_protocol() else "apiws"
     units_dir = units_dir or os.path.join(warehouse, "_tx_units")
     os.makedirs(units_dir, exist_ok=True)
     schemas = _unit_schemas(spark)
 
-    units = (
+    emitted = (
         spark.readStream.schema(UNITS_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(units_dir)
         .groupBy("tx_hash")
-    )
-    if engine == "tws":
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        emitted = units.transformWithStateInPandas(
-            statefulProcessor=TxAssembler(ttl_ms=state_ttl_ms),
-            outputStructType=EMITTED_SCHEMA,
-            outputMode="Update",
-            timeMode="None" if state_ttl_ms is None else "ProcessingTime",
-        )
-    else:
-        emitted = units.applyInPandasWithState(
+        .applyInPandasWithState(
             _make_assemble_fn(state_ttl_ms),
             outputStructType=EMITTED_SCHEMA,
             stateStructType=ASSEMBLE_STATE_SCHEMA,
@@ -642,45 +430,48 @@ def run_keyed_assembler(
                 else GroupStateTimeout.ProcessingTimeTimeout
             ),
         )
+    )
 
     def write_complete(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        batch_df = batch_df.localCheckpoint(eager=True)
-        expired = batch_df.filter(F.col("kind").startswith("expired_"))
-        if not expired.isEmpty():
-            # dead-letter: plain append (diagnostic relation, not a
-            # MergeTree table) — mirrors the batch path's
-            # unresolved_receipts surface
-            expired.withColumn(
-                "kind", F.regexp_replace("kind", "^expired_", "")
-            ).write.mode("append").parquet(
-                os.path.join(warehouse, "expired_tx_units")
-            )
-            batch_df = batch_df.filter(~F.col("kind").startswith("expired_"))
-            if batch_df.isEmpty():
-                return
-        seeds_c = (
-            batch_df.filter(F.col("kind") == "seed")
-            .select(F.from_json("unit_json", schemas["seed"]).alias("u"))
-            .select("u.*")
-        )
-        m_units = (
-            batch_df.filter(F.col("kind") == "exec")
-            .select("tx_hash", F.from_json("unit_json", schemas["exec"]).alias("u"))
-            .select("tx_hash", "u.*")
-        )
-        consumed = (
-            batch_df.filter(F.col("kind") == "data")
-            .select("tx_hash", F.from_json("unit_json", schemas["data"]).alias("u"))
-            .select("tx_hash", "u.*")
-        )
-        block_info = storage.read_table(spark, warehouse, "blocks").select(
-            "block_height", "block_hash", "block_timestamp"
-        )
+        # the batch's checkpoint and fan_out's caches, released after the
+        # last write (the dead-letter append included); ``checkpoint`` in
+        # this scope is the query's checkpoint path
         track: list[DataFrame] = []
-        out = TX.fan_out(seeds_c, m_units, consumed, block_info, track=track)
         try:
+            batch_df = operators.checkpoint(batch_df, track)
+            expired = batch_df.filter(F.col("kind").startswith("expired_"))
+            if not expired.isEmpty():
+                # dead-letter: plain append (diagnostic relation, not a
+                # MergeTree table)
+                expired.withColumn(
+                    "kind", F.regexp_replace("kind", "^expired_", "")
+                ).write.mode("append").parquet(
+                    os.path.join(warehouse, "expired_tx_units")
+                )
+                batch_df = batch_df.filter(~F.col("kind").startswith("expired_"))
+                if batch_df.isEmpty():
+                    return
+            seeds_c = (
+                batch_df.filter(F.col("kind") == "seed")
+                .select(F.from_json("unit_json", schemas["seed"]).alias("u"))
+                .select("u.*")
+            )
+            m_units = (
+                batch_df.filter(F.col("kind") == "exec")
+                .select("tx_hash", F.from_json("unit_json", schemas["exec"]).alias("u"))
+                .select("tx_hash", "u.*")
+            )
+            consumed = (
+                batch_df.filter(F.col("kind") == "data")
+                .select("tx_hash", F.from_json("unit_json", schemas["data"]).alias("u"))
+                .select("tx_hash", "u.*")
+            )
+            block_info = storage.read_table(spark, warehouse, "blocks").select(
+                "block_height", "block_hash", "block_timestamp"
+            )
+            out = TX.fan_out(seeds_c, m_units, consumed, block_info, track=track)
             for name in ("transactions", "account_txs", "block_txs", "receipt_txs"):
                 storage.write_table(out[name], warehouse, name)
         finally:

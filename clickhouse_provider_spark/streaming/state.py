@@ -1,7 +1,6 @@
 """Crash-safe versioned parquet state for foreachBatch pipelines.
 
-Protocol (shared by the relational transactions pipeline and the keyed
-router):
+Protocol (the keyed transactions router's, streaming/keyed_assembly.py):
 
     read:    greatest version STRICTLY < current batch_id — a failed prior
              attempt of this very batch may have left v=batch_id; reading

@@ -1,6 +1,6 @@
-"""Keyed-state transaction assembly (transformWithStateInPandas): same
-fixture-chain results as the relational streaming pipeline, via the
-router → unit-log → keyed-assembler path."""
+"""Keyed-state transaction assembly (applyInPandasWithState): the
+fixture chain's transactions through the router → unit-log →
+keyed-assembler path, and the batch fixpoint's results on random chains."""
 
 import json
 import os
@@ -9,8 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from clickhouse_provider_spark import storage
+from clickhouse_provider_spark.streaming import run_transactions_stream
 from clickhouse_provider_spark.streaming.keyed_assembly import (
-    has_tws_protocol,
     run_keyed_assembler,
     run_keyed_router,
 )
@@ -174,62 +174,7 @@ def test_state_ttl_expires_incomplete_to_dead_letter(spark, tmp_path_factory):
     assert not os.path.exists(os.path.join(wh, "transactions"))
 
 
-@pytest.mark.skipif(
-    not has_tws_protocol(),
-    reason="google.protobuf absent: transformWithStateInPandas' state "
-    "protocol can't initialize (pip install protobuf to enable)",
-)
-def test_tws_engine_end_to_end(spark, keyed_out, tmp_path_factory):
-    """Run the transformWithStateInPandas engine (TxAssembler on RocksDB
-    state) for real over the router's unit log — same 3-tx result as the
-    applyInPandasWithState twin the other tests exercise."""
-    import shutil
-
-    wh2 = str(tmp_path_factory.mktemp("wh_keyed_tws"))
-    units2 = os.path.join(wh2, "_tx_units")
-    os.makedirs(units2)
-    units_src = os.path.join(keyed_out, "_tx_units")
-    for i, f in enumerate(
-        sorted(
-            (f for f in os.listdir(units_src) if f.endswith(".parquet")),
-            key=lambda f: os.path.getmtime(os.path.join(units_src, f)),
-        )
-    ):
-        shutil.copy(os.path.join(units_src, f), os.path.join(units2, f"u{i}.parquet"))
-    shutil.copytree(os.path.join(keyed_out, "blocks"), os.path.join(wh2, "blocks"))
-    q = run_keyed_assembler(
-        spark, wh2,
-        checkpoint=str(tmp_path_factory.mktemp("ckpt_tws")),
-        max_files_per_trigger=2,
-        engine="tws",
-    )
-    q.awaitTermination(240)
-    txs = storage.read_table(spark, wh2, "transactions")
-    assert {r["transaction_hash"] for r in txs.collect()} == {"T1", "T2", "T3"}
-    assert txs.count() == 3
-    # differential: every fan-out table must match the applyInPandasWithState
-    # twin's output row-for-row (the two engines claim interchangeability)
-    for name in ("transactions", "account_txs", "block_txs", "receipt_txs"):
-        a = storage.read_table(spark, keyed_out, name)
-        b = storage.read_table(spark, wh2, name)
-        assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect())), name
-
-
-@pytest.mark.parametrize(
-    "engine",
-    [
-        "apiws",
-        pytest.param(
-            "tws",
-            marks=pytest.mark.skipif(
-                not has_tws_protocol(), reason="google.protobuf absent"
-            ),
-        ),
-    ],
-)
-def test_out_of_order_unit_files_never_emit_partial_tx(
-    spark, tmp_path_factory, engine
-):
+def test_out_of_order_unit_files_never_emit_partial_tx(spark, tmp_path_factory):
     """Reorder regression (round-4 divergence): the unit-log file source
     orders by modification time with unspecified tie-breaking, so appends
     can be CONSUMED out of append order. With the old count gate
@@ -285,7 +230,6 @@ def test_out_of_order_unit_files_never_emit_partial_tx(
         spark, wh2,
         checkpoint=str(tmp_path_factory.mktemp("ckpt_asm_ro")),
         max_files_per_trigger=1,  # every append its own micro-batch
-        engine=engine,
     )
     q2.awaitTermination(240)
     raw = spark.read.parquet(os.path.join(wh2, "transactions"))
@@ -372,6 +316,11 @@ def test_completed_tombstone_blocks_replayed_tail(spark, keyed_out, tmp_path_fac
     assert storage.read_table(spark, keyed_out, "transactions").count() == 3
 
 
+def _checkpointed_rdds(spark) -> set:
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()  # noqa: SLF001
+    return {k for k in rdds.keys() if rdds[k].rdd().isCheckpointed()}
+
+
 def test_router_batch_releases_its_checkpoints(spark, tmp_path_factory):
     """The router checkpoints its fixpoint rounds and carried state every
     micro-batch; each batch releases them once its state is published,
@@ -379,17 +328,66 @@ def test_router_batch_releases_its_checkpoints(spark, tmp_path_factory):
     from clickhouse_provider_spark.schemas import BLOCK_SCHEMA
     from clickhouse_provider_spark.streaming.keyed_assembly import KeyedRouter
 
-    def checkpoints() -> set:
-        rdds = spark.sparkContext._jsc.getPersistentRDDs()  # noqa: SLF001
-        return {k for k in rdds.keys() if rdds[k].rdd().isCheckpointed()}
-
     wh = str(tmp_path_factory.mktemp("wh_router_release"))
     units = os.path.join(wh, "_tx_units")
     os.makedirs(units)
     router = KeyedRouter(spark, wh, units, os.path.join(wh, "_router_state"))
     chain = FC.make_chain()
-    before = checkpoints()
+    before = _checkpointed_rdds(spark)
     for batch_id, part in enumerate((chain[:3], chain[3:])):
         rows = spark.sparkContext.parallelize([json.dumps(b) for b in part], 1)
         router.process_batch(spark.read.schema(BLOCK_SCHEMA).json(rows), batch_id)
-        assert checkpoints() - before == set()
+        assert _checkpointed_rdds(spark) - before == set()
+
+
+PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+
+
+@pytest.fixture(scope="module")
+def observed_drain(spark, tmp_path_factory):
+    """One transactions-stream drain of the fixture chain, two block files
+    per router batch, with the session's checkpointed RDDs and state-store
+    provider read before and after it."""
+    src = tmp_path_factory.mktemp("observed_drops")
+    for b in FC.make_chain():
+        h = b["block"]["header"]["height"]
+        (src / f"block-{h:012d}.json").write_text(json.dumps(b))
+    wh = str(tmp_path_factory.mktemp("wh_observed"))
+    prev = spark.conf.get(PROVIDER, None)
+    # the session's default, set explicitly so the pin does not depend on
+    # what an earlier test left behind
+    spark.conf.set(
+        PROVIDER,
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+    )
+    try:
+        before = (_checkpointed_rdds(spark), spark.conf.get(PROVIDER))
+        q = run_transactions_stream(
+            spark, str(src), wh,
+            str(tmp_path_factory.mktemp("ckpt_observed")),
+            max_files_per_trigger=2,
+        )
+        q.awaitTermination(240)
+        after = (_checkpointed_rdds(spark), spark.conf.get(PROVIDER))
+    finally:
+        if prev is None:
+            spark.conf.unset(PROVIDER)
+        else:
+            spark.conf.set(PROVIDER, prev)
+    txs = {r["transaction_hash"] for r in storage.read_table(spark, wh, "transactions").collect()}
+    assert txs == {"T1", "T2", "T3"}
+    return before, after
+
+
+def test_assembler_batches_release_their_checkpoints(observed_drain):
+    """Each assembler batch checkpoints its emitted units and releases
+    them after its last write, so a drain leaves no checkpoint blocks."""
+    (ckpts_before, _), (ckpts_after, _) = observed_drain
+    assert ckpts_after - ckpts_before == set()
+
+
+def test_drain_keeps_the_session_state_store_provider(observed_drain):
+    """A transactions stream runs on the session's state store; it never
+    switches the provider for every later stateful query in the JVM."""
+    (_, provider_before), (_, provider_after) = observed_drain
+    assert provider_after == provider_before

@@ -9,7 +9,7 @@ run, so the rule is pinned here where it fails fast.
 
 from types import SimpleNamespace
 
-from clickhouse_provider_spark import session, vendor
+from clickhouse_provider_spark import session
 from clickhouse_provider_spark.session import driver_memory, host_memory_bytes
 
 GIB = 2**30
@@ -69,7 +69,6 @@ def test_codegen_cache_is_set_on_the_builder(monkeypatch):
     working set (491 classes for a backfill round)."""
     builder = _RecordingBuilder()
     monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=builder))
-    monkeypatch.setattr(vendor, "ensure_protobuf", lambda: True)
     monkeypatch.setenv("SPARK_SUBMIT_OPTS", "-Xss16m")
     session.get_spark()
     assert builder.conf["spark.sql.codegen.cache.maxEntries"] == "1000"

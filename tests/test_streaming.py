@@ -38,19 +38,14 @@ def test_actions_stream(spark, src_dir, tmp_path_factory):
     assert storage.read_table(spark, wh, "events").count() == 3
 
 
-@pytest.mark.parametrize("engine", ["keyed", "legacy"])
-def test_transactions_stream_cross_batch(spark, src_dir, tmp_path_factory, engine):
+def test_transactions_stream_cross_batch(spark, src_dir, tmp_path_factory):
     """One block per micro-batch. The file source happens to deliver these
     fixtures OUT of height order (identical mtimes) — which the state model
     must tolerate: unmapped outcomes wait in state until their seed block
-    arrives (stronger than the reference's ordered-stream panic). Both the
-    default incremental keyed path and the legacy relational fallback must
-    produce identical tables."""
-    wh = str(tmp_path_factory.mktemp(f"wh_tx_{engine}"))
-    ckpt = str(tmp_path_factory.mktemp(f"ckpt_tx_{engine}"))
-    q = run_transactions_stream(
-        spark, src_dir, wh, ckpt, max_files_per_trigger=1, engine=engine
-    )
+    arrives (stronger than the reference's ordered-stream panic)."""
+    wh = str(tmp_path_factory.mktemp("wh_tx"))
+    ckpt = str(tmp_path_factory.mktemp("ckpt_tx"))
+    q = run_transactions_stream(spark, src_dir, wh, ckpt, max_files_per_trigger=1)
     q.awaitTermination(240)
     txs = {r["transaction_hash"]: r for r in storage.read_table(spark, wh, "transactions").collect()}
     assert set(txs) == {"T1", "T2", "T3"}

@@ -47,17 +47,22 @@ def test_stop_and_resume(spark, tmp_path_factory):
 
 
 def test_crash_replay_microbatch(spark, tmp_path_factory):
-    """Crash-replay of a micro-batch: after a failed attempt has already
-    published state v=N, the replay of batch N must read state from v<N
-    (never its own prior output — that self-overwrite wedged the stream)
-    and converge to the same tables. Also covers leftover staging dirs."""
+    """Crash-replay of a router micro-batch: after a failed attempt has
+    already published state v=N, the replay of batch N must read state
+    from v<N (never its own prior output — that self-overwrite wedged the
+    stream), clean up a leftover staging dir, and keep two versions. The
+    replayed unit appends must not emit any transaction twice."""
     import os
-    import shutil
 
     from clickhouse_provider_spark.schemas import BLOCK_SCHEMA
-    from clickhouse_provider_spark.streaming.pipeline import TransactionsStream
+    from clickhouse_provider_spark.streaming.keyed_assembly import (
+        KeyedRouter,
+        run_keyed_assembler,
+    )
 
     wh = str(tmp_path_factory.mktemp("replay_wh"))
+    units = os.path.join(wh, "_tx_units")
+    os.makedirs(units)
     state = str(tmp_path_factory.mktemp("replay_state"))
     chain = FC.make_chain()
 
@@ -66,24 +71,32 @@ def test_crash_replay_microbatch(spark, tmp_path_factory):
             spark.sparkContext.parallelize([json.dumps(b) for b in bs], 1)
         )
 
-    s = TransactionsStream(spark, wh, state)
-    s.process_batch(bdf(chain[:3]), 0)
-    assert {r["transaction_hash"] for r in storage.read_table(spark, wh, "transactions").collect()} == {"T2"}
-    s.process_batch(bdf(chain[3:]), 1)
+    router = KeyedRouter(spark, wh, units, state)
+    router.process_batch(bdf(chain[:3]), 0)
+    router.process_batch(bdf(chain[3:]), 1)
     # leftover staging dir from a hypothetical crash mid-publish
-    os.makedirs(os.path.join(state, "_staging_v=1", "seeds"), exist_ok=True)
+    os.makedirs(os.path.join(state, "_staging_v=1", "routing"), exist_ok=True)
     # crash-replay: v=1 exists from the "failed" attempt; replay batch 1
-    s.process_batch(bdf(chain[3:]), 1)
+    router.process_batch(bdf(chain[3:]), 1)
 
+    q = run_keyed_assembler(
+        spark, wh, checkpoint=str(tmp_path_factory.mktemp("replay_asm"))
+    )
+    q.awaitTermination(240)
     txs = {r["transaction_hash"]: r for r in storage.read_table(spark, wh, "transactions").collect()}
     assert set(txs) == {"T1", "T2", "T3"}
     assert txs["T1"]["last_block_height"] == 103
-    # dedup-on-read collapses the replayed appends to one row per tx
-    raw = storage.read_table(spark, wh, "transactions")
-    assert raw.count() == 3
-    # published versions are complete (all three parts present), pruned to 2
+    blob = json.loads(txs["T1"]["transaction"])
+    assert [r["receipt"]["receipt_id"] for r in blob["receipts"]] == ["R1", "R2", "R3"]
+    # each transaction emitted once: the assembler dropped the replayed
+    # units by their dedup keys (raw files, not the dedup-on-read view)
+    raw = spark.read.parquet(os.path.join(wh, "transactions"))
+    assert sorted(r["transaction_hash"] for r in raw.collect()) == ["T1", "T2", "T3"]
+    # published versions are complete (all four parts present), pruned to 2
     versions = sorted(d for d in os.listdir(state) if d.startswith("v="))
     assert versions == ["v=0", "v=1"]
     for v in versions:
-        assert sorted(os.listdir(os.path.join(state, v))) == ["data", "outcomes", "seeds"]
+        assert sorted(os.listdir(os.path.join(state, v))) == [
+            "consume_wait", "data_wait", "outcome_wait", "routing",
+        ]
     assert not [d for d in os.listdir(state) if d.startswith("_staging")]

@@ -6,9 +6,10 @@ The pinned gate test (tests/test_keyed_assembly.py::
 test_random_chain_streaming_matches_batch_fixpoint) runs ONE generated
 chain (seed=7, 16 blocks). This sweep runs the same differential over
 many seeds and chain lengths: the streaming router -> unit-log -> keyed
-assembler path must produce row-identical fan-out tables to the batch
-fixpoint (operators/transactions.assemble) on every closed random
-receipt forest. Results land in bisect/PROP_SWEEP_r12.md.
+assembler path (streaming/pipeline.run_transactions_stream) must produce
+row-identical fan-out tables to the batch fixpoint
+(operators/transactions.assemble) on every closed random receipt forest.
+Results land in bisect/PROP_SWEEP_r12.md.
 
 Usage: python tools/assembly_sweep.py [seeds...] (default 1 2 3 11 23 42)
 """
@@ -25,9 +26,8 @@ from clickhouse_provider_spark import storage  # noqa: E402
 from clickhouse_provider_spark.operators import transactions as TX  # noqa: E402
 from clickhouse_provider_spark.schemas import BLOCK_SCHEMA  # noqa: E402
 from clickhouse_provider_spark.session import get_spark  # noqa: E402
-from clickhouse_provider_spark.streaming.keyed_assembly import (  # noqa: E402
-    run_keyed_assembler,
-    run_keyed_router,
+from clickhouse_provider_spark.streaming.pipeline import (  # noqa: E402
+    run_transactions_stream,
 )
 from tests.random_chain import make_random_chain  # noqa: E402
 
@@ -45,14 +45,9 @@ def one_case(spark, seed: int, n_blocks: int, workdir: str) -> dict:
     incomplete = batch["incomplete"].count()
     n_txs = batch["transactions"].count()
     wh = os.path.join(workdir, "wh")
-    run_keyed_router(
+    run_transactions_stream(
         spark, src, wh,
-        checkpoint=os.path.join(workdir, "ckpt_r"),
-        max_files_per_trigger=4,
-    ).awaitTermination(300)
-    run_keyed_assembler(
-        spark, wh,
-        checkpoint=os.path.join(workdir, "ckpt_a"),
+        checkpoint=os.path.join(workdir, "ckpt"),
         max_files_per_trigger=4,
     ).awaitTermination(300)
     mismatches = []

@@ -228,7 +228,7 @@ def probe_streaming_assembly(spark, k: int) -> float:
     """End-to-end STREAMING replay of the keyed assembly with state forced
     onto the RocksDB state store provider: blocks land as JSON files in a
     drop directory, the router → unit-log → keyed-assembler pipeline
-    (streaming/keyed_assembly.run_keyed_transactions) drains them with
+    (streaming/pipeline.run_transactions_stream) drains them with
     availableNow triggers, and the timing covers the full source → RocksDB
     state → fan-out-tables path. Every tx leaves a completed-tombstone key
     in state, so state cardinality grows linearly with k — the probe
@@ -239,9 +239,7 @@ def probe_streaming_assembly(spark, k: int) -> float:
     import shutil
     import tempfile
 
-    from clickhouse_provider_spark.streaming.keyed_assembly import (
-        run_keyed_transactions,
-    )
+    from clickhouse_provider_spark.streaming.pipeline import run_transactions_stream
     from tools.bench_pipeline import make_block
 
     spark.conf.set(
@@ -264,7 +262,7 @@ def probe_streaming_assembly(spark, k: int) -> float:
                     f.write(json.dumps(make_block(100 + i, 5)) + "\n")
             fi += 1
         start = time.perf_counter()
-        q = run_keyed_transactions(
+        q = run_transactions_stream(
             spark,
             src,
             warehouse=os.path.join(root, "wh"),
