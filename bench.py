@@ -400,9 +400,7 @@ def bench_assembly(spark, n_replicas: int | None = None) -> dict:
     def one_pass() -> tuple[float, int]:
         track = []  # release ALL of assemble_from_parts' persists per pass
         out = TX.assemble_from_parts(*parts, track=track)
-        tables = {
-            k: df.persist() for k, df in out.items() if k != "mapping"
-        }
+        tables = {k: df.persist() for k, df in out.items()}
         start = time.perf_counter()
         for df in tables.values():
             force(df)

@@ -34,6 +34,7 @@ from glob import glob
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clickhouse_provider_spark.operators import transactions as TX
 from clickhouse_provider_spark.schemas import SORT_KEYS
 from clickhouse_provider_spark.storage import with_skip_indexes
 
@@ -208,7 +209,7 @@ def reorg_repair(
 
 
 def detect_fork(
-    spark: SparkSession, warehouse: str, bucket: int = 1_000_000
+    spark: SparkSession, warehouse: str, bucket: int = TX.CONTINUITY_BUCKET
 ) -> int | None:
     """Lowest block height whose ``prev_block_hash`` does not match the
     stored previous block's hash — the fork point to hand to
@@ -216,49 +217,17 @@ def detect_fork(
     assert, transactions.rs:185-191, turned from a panic into a queryable
     fact). Returns None when the stored chain is consistent.
 
-    Same two-phase shape as ``operators.transactions.chain_violations``:
-    a per-bucket lag (parallel, no global single-task sort) plus a lag
-    over the one-row-per-bucket boundary summary — O(n) with a bounded
-    final step, so it runs against the full blocks table at any scale.
-    A missing height also surfaces (its successor's prev_hash can't match
-    the hash of the block before the gap)."""
-    from pyspark.sql.window import Window as W
-
+    The minimum of ``operators.transactions.link_violations`` over the
+    stored blocks table: its bucketed two-phase check runs against the
+    full table at any scale, and a missing height surfaces too."""
     from clickhouse_provider_spark import storage
 
-    b = storage.read_table(spark, warehouse, "blocks").select(
-        "block_height", "block_hash", "prev_block_hash"
-    )
-    bkt = F.floor(F.col("block_height") / F.lit(bucket))
-    wb = W.partitionBy(bkt).orderBy("block_height")
-    within = (
-        b.withColumn("actual_prev", F.lag("block_hash").over(wb))
-        .filter(
-            F.col("actual_prev").isNotNull()
-            & (F.col("actual_prev") != F.col("prev_block_hash"))
-        )
-        .select(F.col("block_height").alias("violation_height"))
-    )
-    summary = b.groupBy(bkt.alias("bkt")).agg(
-        F.min_by(
-            F.struct("block_height", "prev_block_hash"), F.col("block_height")
-        ).alias("first"),
-        F.max_by(F.struct("block_height", "block_hash"), F.col("block_height")).alias(
-            "last"
-        ),
-    )
-    wo = W.orderBy("bkt")
-    boundary = (
-        summary.withColumn("prev_last", F.lag("last").over(wo))
-        .filter(
-            F.col("prev_last").isNotNull()
-            & (F.col("prev_last.block_hash") != F.col("first.prev_block_hash"))
-        )
-        .select(F.col("first.block_height").alias("violation_height"))
+    links = storage.read_table(spark, warehouse, "blocks").select(
+        "block_height", "block_hash", F.col("prev_block_hash").alias("prev_hash")
     )
     return (
-        within.unionByName(boundary)
-        .agg(F.min("violation_height"))
+        TX.link_violations(links, bucket)
+        .agg(F.min("block_height"))
         .collect()[0][0]
     )
 

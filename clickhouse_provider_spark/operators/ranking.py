@@ -131,7 +131,6 @@ def bucketed_cumsum(
     group_cols: list[str] | None = None,
     out_col: str | list[str] = "cum",
     broadcast_offsets: bool = True,
-    single_pass: bool = False,
     bucket_totals: DataFrame | None = None,
 ) -> DataFrame:
     """Distributed running sum of ``val_col`` in ``order_col`` order within
@@ -186,46 +185,27 @@ def bucketed_cumsum(
     subtrees, so ``df``'s lineage is evaluated TWICE — on an idle local
     cluster the copies run as concurrent jobs and the duplication is
     nearly free, but an expensive input pays double the work at scale.
-    Two mutually-exclusive remedies, both value-identical (pinned in
-    test_round15_pins.py against the window formulation):
-
-    - ``bucket_totals``: the caller supplies the per-(group, bucket)
-      subtotal relation from a CHEAPER equivalent source (guide §8 —
-      decide with small rows). Schema: ``[*group_cols, "_bkt",
-      "_bw0".."_bw{k-1}"]`` with ``_bw{i}`` = the sum of ``val_cols[i]``
-      over exactly the rows of ``df`` that land in that bucket (the
-      caller's proof obligation — e.g. when ``df`` is a
-      count-collapse of a raw relation, raw row counts per bucket).
-      The expensive lineage is then evaluated ONCE (under the window),
-      and the offsets subtree is the caller's cheap scan, running
-      concurrently as the broadcast future. This is the preferred form
-      when an equivalent cheap source exists. Every (group, bucket) of
-      ``df`` with non-NULL group keys must have exactly ONE totals row:
-      a missing key or a duplicated key fails the query (``raise_error``
-      inside the plan — no extra job), where an inner offsets join would
-      silently drop or fan out rows.
-    - ``single_pass=True``: shuffle ``df`` once by (group, bucket) and
-      derive BOTH passes from that one exchange (AQE stage reuse; a
-      pruning-defeating ``_keep`` aggregate keeps the two copies
-      canonically identical). One evaluation, but the offsets subtree
-      now sits ON the critical path behind the shared stage — measured
-      SLOWER at the local bench for every shipped caller (spearman −26%,
-      mann_whitney/ks −5-10%, sequence_packing ~−5%: the dual copies run
-      as concurrent jobs on an idle host, so the duplication is hidden
-      while the stage serialization is not), which is why the default
-      remains the dual-evaluation shape and no shipped caller sets this.
-      The door exists for callers whose input lineage is expensive
-      relative to one shuffle of it and has no cheap-equivalent totals
-      source — at scale the duplicated work is real even when the local
-      bench cannot see it.
+    The remedy is ``bucket_totals``, value-identical (pinned in
+    test_round15_pins.py against the window formulation): the caller
+    supplies the per-(group, bucket) subtotal relation from a CHEAPER
+    equivalent source (guide §8 — decide with small rows). Schema:
+    ``[*group_cols, "_bkt", "_bw0".."_bw{k-1}"]`` with ``_bw{i}`` = the
+    sum of ``val_cols[i]`` over exactly the rows of ``df`` that land in
+    that bucket (the caller's proof obligation — e.g. when ``df`` is a
+    count-collapse of a raw relation, raw row counts per bucket). The
+    expensive lineage is then evaluated ONCE (under the window), and the
+    offsets subtree is the caller's cheap scan, running concurrently as
+    the broadcast future. Every (group, bucket) of ``df`` with non-NULL
+    group keys must have exactly ONE totals row: a missing key or a
+    duplicated key fails the query (``raise_error`` inside the plan — no
+    extra job), where an inner offsets join would silently drop or fan
+    out rows.
 
     Spearman's caller uses ``bucket_totals`` (see plans/catalog10.py):
     REPS=7 idle-host A/B r14-dual vs totals: 2.768 → 2.596 s median
     (2.483 → 2.397 s min), with the executed plan's expensive collapse
     evaluated once.
     """
-    if single_pass and bucket_totals is not None:
-        raise ValueError("single_pass and bucket_totals are mutually exclusive")
     group_cols = list(group_cols or [])
     val_cols = [val_col] if isinstance(val_col, str) else list(val_col)
     out_cols = [out_col] if isinstance(out_col, str) else list(out_col)
@@ -238,46 +218,6 @@ def bucketed_cumsum(
     # offset while its own rows vanish (caught by
     # tests/test_round10_pins.py::test_bucketed_cumsum_null_bucket_rows_excluded)
     b = df.withColumn("_bkt", bucket).filter(F.col("_bkt").isNotNull())
-    keep_aggs = []
-    if single_pass:
-        # Guide §2.4 "two operations keyed the same way can share one
-        # exchange": the offsets aggregation and the local-window pass
-        # both need ``b`` clustered by (group, _bkt). One explicit
-        # repartition on exactly those keys makes the two consumers'
-        # exchanges canonically identical, so AQE's stage cache
-        # (ReuseExchange at runtime) computes the input subtree ONCE and
-        # both read the same shuffle output. No numPartitions is passed,
-        # so AQE remains free to coalesce. Values are
-        # partitioning-independent (pinned in test_round15_pins.py).
-        #
-        # The reuse only fires if both copies of the exchange PRUNE
-        # identically: the offsets aggregation references just (group,
-        # _bkt, val) while the window branch carries every payload
-        # column, so left alone the optimizer narrows the offsets copy
-        # (and re-shapes joins under it — observed on spearman: the
-        # pruned copy turned the midrank join's build side into a
-        # distinct with different pushed filters, breaking canonical
-        # equality). ``_keep`` — min(pmod(xxhash64(<every other
-        # column>), 1024)) — forces the offsets branch to reference the
-        # full width; it is consumed by an always-true join predicate
-        # below (pmod result is in [0, 1024), but no optimizer rule can
-        # bound a min-of-pmod, so neither the aggregate nor the
-        # predicate folds away — count(struct(...)) does NOT work:
-        # count of a non-nullable expression is rewritten to count(1),
-        # dropping the references). It never changes a value or an
-        # output type. Payload columns must be xxhash64-hashable (every
-        # Spark type except MapType) — true of all shipped callers.
-        b = b.repartition(*group_cols, "_bkt")
-        rest = [
-            c
-            for c in b.columns
-            if c not in set(group_cols) | {"_bkt"} and c not in val_cols
-        ]
-        keep_aggs = (
-            [F.min(F.pmod(F.xxhash64(*rest), F.lit(1024))).alias("_keep")]
-            if rest
-            else []
-        )
     checked = bucket_totals is not None
     if checked:
         need = [*group_cols, "_bkt"] + [f"_bw{i}" for i in range(len(val_cols))]
@@ -296,8 +236,7 @@ def bucketed_cumsum(
             b = b.filter(F.col(c).isNotNull())
     else:
         sub = b.groupBy(*group_cols, "_bkt").agg(
-            *[F.sum(v).alias(f"_bw{i}") for i, v in enumerate(val_cols)],
-            *keep_aggs,
+            *[F.sum(v).alias(f"_bw{i}") for i, v in enumerate(val_cols)]
         )
     k = len(val_cols)
     if group_cols:
@@ -312,7 +251,6 @@ def bucketed_cumsum(
                 (F.sum(f"_bw{i}").over(wb) - F.col(f"_bw{i}")).alias(f"_off{i}")
                 for i in range(k)
             ],
-            *(["_keep"] if keep_aggs else []),
             *([dup.alias("_dup")] if checked else []),
         )
     else:
@@ -325,22 +263,14 @@ def bucketed_cumsum(
         # its own subtotal is folded in.
         sum_dts = [sub.schema[f"_bw{i}"].dataType for i in range(k)]
         bkt_dt = sub.schema["_bkt"].dataType.simpleString()
-        keep_t = ",_keep:bigint" if keep_aggs else ""
         out_t = (
             "array<struct<_bkt:" + bkt_dt + ","
             + ",".join(f"_off{i}:{dt.simpleString()}" for i, dt in enumerate(sum_dts))
-            + keep_t
             + ">>"
         )
         packed = sub.agg(
             F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        "_bkt",
-                        *[f"_bw{i}" for i in range(k)],
-                        *(["_keep"] if keep_aggs else []),
-                    )
-                )
+                F.collect_list(F.struct("_bkt", *[f"_bw{i}" for i in range(k)]))
             ).alias("_a")
         )
         fold = F.aggregate(
@@ -364,7 +294,6 @@ def bucketed_cumsum(
                     F.struct(
                         x["_bkt"].alias("_bkt"),
                         *[acc[f"s{i}"].alias(f"_off{i}") for i in range(k)],
-                        *([x["_keep"].alias("_keep")] if keep_aggs else []),
                     ),
                 ).alias("out"),
             ),
@@ -377,7 +306,6 @@ def bucketed_cumsum(
         ).select(
             "_o._bkt",
             *[f"_o._off{i}" for i in range(k)],
-            *(["_o._keep"] if keep_aggs else []),
             *(["_dup"] if checked else []),
         )
     wl = W.partitionBy(*group_cols, "_bkt").orderBy(order_col)
@@ -386,27 +314,7 @@ def bucketed_cumsum(
     # shuffle of the collapsed relation just to meet a few-KB table, and
     # step 3's window re-shuffles on (group, bucket) anyway. A caller whose
     # group product is NOT driver-small opts out via broadcast_offsets.
-    # The join consumes ``_keep`` via an always-true predicate (the pmod
-    # aggregate is ≥ 0 > -1, but no optimizer rule can prove that) — the
-    # reference chain that stops column pruning from re-narrowing the
-    # offsets branch. Keys are renamed and joined with plain ``==``
-    # (identical null-dropping semantics to the using-columns join this
-    # replaces).
-    if keep_aggs:
-        offsets = offsets.select(
-            *[F.col(c).alias(f"_r_{c}") for c in [*group_cols, "_bkt"]],
-            *[f"_off{i}" for i in range(k)],
-            "_keep",
-        )
-        if broadcast_offsets:
-            offsets = F.broadcast(offsets)
-        cond = F.col("_keep") >= F.lit(-1)
-        for c in [*group_cols, "_bkt"]:
-            cond = cond & (F.col(c) == F.col(f"_r_{c}"))
-        out = b.join(offsets, cond).drop(
-            "_keep", *[f"_r_{c}" for c in [*group_cols, "_bkt"]]
-        )
-    elif checked:
+    if checked:
         # caller-supplied totals: a left join keeps the rows whose key has
         # no totals row, and the filter fails the query on them or on a
         # duplicated key (a filter is never pruned away, unlike a check

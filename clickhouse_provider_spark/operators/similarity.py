@@ -16,31 +16,21 @@ No Python UDFs: everything is higher-order-function codegen on the JVM.
 from __future__ import annotations
 
 import hashlib
+import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def dot(a: F.Column, b: F.Column) -> F.Column:
-    """Left-to-right double dot product (deterministic fold order)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def dot_sql(a: str, b: str) -> str:
-    """SQL-string twin of :func:`dot` for plan-construction hot paths
-    (round 15, VERDICT r14 task 5): building the zip_with/aggregate
-    lambda tree through the Python Column API costs ~250 py4j
-    round-trips PER CALL (measured — tools/py4j_count.py), while one
-    ``F.expr`` ships the whole expression in a single round-trip and
-    parses JVM-side to the IDENTICAL expression tree (same casts, same
-    left-to-right fold, so values are bit-identical; double literals are
-    D-suffixed — an unsuffixed 0.0 would parse as DECIMAL). ``a``/``b``
-    are SQL fragments (column names / field paths), the caller's
-    responsibility to keep well-formed."""
+    """Left-to-right double dot product (deterministic fold order) as a
+    SQL string: one ``F.expr`` ships the whole zip_with/aggregate lambda
+    tree in a single py4j round-trip, where building it through the
+    Python Column API costs ~250 round-trips PER CALL (measured — round
+    15, tools/py4j_count.py). Double literals are D-suffixed — an
+    unsuffixed 0.0 would parse as DECIMAL. ``a``/``b`` are SQL fragments
+    (column names / field paths / :func:`double_array_sql` literals), the
+    caller's responsibility to keep well-formed."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
         f"CAST(y AS DOUBLE)), 0.0D, (acc, v) -> acc + v)"
@@ -51,29 +41,34 @@ def dot_expr(a: str, b: str) -> F.Column:
     return F.expr(dot_sql(a, b))
 
 
-def norm(a: F.Column) -> F.Column:
-    return F.sqrt(dot(a, a))
+def norm_sql(a: str) -> str:
+    return f"sqrt({dot_sql(a, a)})"
 
 
 def cosine_sql(a: str, b: str) -> str:
-    """SQL-string twin of :func:`cosine` (same single-round-trip
-    rationale as :func:`dot_sql`; ~750 py4j calls saved per use)."""
-    return (
-        f"{dot_sql(a, b)} / nullif(sqrt({dot_sql(a, a)}) * "
-        f"sqrt({dot_sql(b, b)}), 0.0D)"
-    )
+    # nullif: a zero vector (empty doc -> zero embedding) has no direction;
+    # under ANSI mode the bare division would THROW on it and kill the whole
+    # job at 100 TB. NULL instead — it sorts last under every DESC top-k in
+    # the catalog, same as the oracles' nullif (NULLS LAST on both engines).
+    return f"{dot_sql(a, b)} / nullif({norm_sql(a)} * {norm_sql(b)}, 0.0D)"
 
 
 def cosine_expr(a: str, b: str) -> F.Column:
     return F.expr(cosine_sql(a, b))
 
 
-def cosine(a: F.Column, b: F.Column) -> F.Column:
-    # nullif: a zero vector (empty doc -> zero embedding) has no direction;
-    # under ANSI mode the bare division would THROW on it and kill the whole
-    # job at 100 TB. NULL instead — it sorts last under every DESC top-k in
-    # the catalog, same as the oracles' nullif (NULLS LAST on both engines).
-    return dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0))
+def double_array_sql(values) -> str:
+    """SQL ``array<double>`` literal holding exactly ``values``: finite
+    doubles as their shortest round-tripping repr, D-suffixed (``-0.0D``
+    keeps its sign); NaN and ±infinity as a folded string cast. A Python
+    query vector or hyperplane costs no py4j call this way (a 64-lit
+    F.array costs ~130)."""
+
+    def lit(x: float) -> str:
+        x = float(x)
+        return f"{x!r}D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
+
+    return "array(" + ",".join(lit(x) for x in values) + ")"
 
 
 def cosine_topk(
@@ -113,35 +108,16 @@ def hyperplane_signs(n_planes: int, dim: int) -> list[list[int]]:
     ]
 
 
-def _plane_sql(signs: list[int]) -> str:
-    """SQL double-array literal for one ±1 hyperplane (round 15: a
-    64-lit F.array costs ~130 py4j calls; the string costs none)."""
-    return "array(" + ",".join(f"{float(s)!r}D" for s in signs) + ")"
-
-
 def lsh_signature_sql(vec_sql: str, planes: list[list[int]]) -> str:
-    """SQL-string twin of the old Column-API lsh_signature: bit p of the
-    signature = sign(dot(vec, plane_p)) >= 0. One F.expr round-trip
-    instead of ~400 py4j calls per plane; the parsed tree is identical
-    (0 + CASE... left-assoc, int literals, same dot fold)."""
+    """Bit p of the signature = sign(dot(vec, plane_p)) >= 0, as one SQL
+    expression (0 + CASE... left-assoc, int literals, the
+    :func:`dot_sql` fold)."""
     terms = " + ".join(
-        f"(CASE WHEN {dot_sql(vec_sql, _plane_sql(signs))} >= 0 "
+        f"(CASE WHEN {dot_sql(vec_sql, double_array_sql(signs))} >= 0 "
         f"THEN {2 ** p} ELSE 0 END)"
         for p, signs in enumerate(planes)
     )
     return f"0 + {terms}" if terms else "0"
-
-
-def lsh_signature(vec: F.Column, planes: list[list[int]]) -> F.Column:
-    """Bit p of the signature = sign(dot(vec, plane_p)) >= 0.
-    (Column-API form — kept for callers holding an arbitrary Column;
-    plan-construction hot paths use :func:`lsh_signature_sql`.)"""
-    sig = F.lit(0)
-    for p, signs in enumerate(planes):
-        plane = F.array(*[F.lit(float(s)) for s in signs])
-        d = dot(vec, plane)
-        sig = sig + F.when(d >= 0, F.lit(2**p)).otherwise(0)
-    return sig
 
 
 def lsh_bucket_topk(
@@ -431,7 +407,7 @@ def _argmax_cell(
         [np.asarray(r["centroid"], dtype=np.float64) for r in rows]
     )  # (k, d)
     k, d = C.shape
-    # norm_c: left-to-right self-dot fold, identical to norm(centroid)
+    # norm_c: left-to-right self-dot fold, identical to norm_sql(centroid)
     c2 = np.zeros(k, dtype=np.float64)
     for j in range(d):
         c2 += C[:, j] * C[:, j]
@@ -748,13 +724,11 @@ def ivf_query_index(
     :func:`ivf_filtered_topk`'s ``inprobe`` mode."""
     import os
 
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    q = double_array_sql(query_vec)
     cents = spark.read.parquet(os.path.join(path, "_centroids"))
     probes = [
         r["cell_id"]
-        for r in cents.select(
-            "cell_id", cosine(F.col("centroid"), q).alias("c")
-        )
+        for r in cents.select("cell_id", cosine_expr("centroid", q).alias("c"))
         .orderBy(F.col("c").desc(), "cell_id")
         .limit(nprobe)
         .collect()
@@ -766,7 +740,7 @@ def ivf_query_index(
         idx.select(
             F.col(id_col),
             F.col("cell_id"),
-            cosine(F.col(vec_col), q).alias("cos_sim"),
+            cosine_expr(vec_col, q).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), F.col(id_col))
         .limit(k)
@@ -778,7 +752,7 @@ def embedding_norms(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embe
     return emb.select(
         F.col(id_col),
         F.col("label"),
-        norm(F.col(vec_col)).alias("l2_norm"),
+        F.expr(norm_sql(vec_col)).alias("l2_norm"),
         F.size(F.col(vec_col)).alias("dim"),
     )
 
@@ -1057,11 +1031,11 @@ def ivfpq_query_index(
     """
     import os
 
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    q = double_array_sql(query_vec)
     cents = spark.read.parquet(os.path.join(path, "_centroids"))
     probes = [
         r["cell_id"]
-        for r in cents.select("cell_id", cosine(F.col("centroid"), q).alias("c"))
+        for r in cents.select("cell_id", cosine_expr("centroid", q).alias("c"))
         .orderBy(F.col("c").desc(), "cell_id")
         .limit(nprobe)
         .collect()
@@ -1076,7 +1050,7 @@ def ivfpq_query_index(
     partials = (
         spark.read.parquet(os.path.join(path, "_codebooks"))
         .join(F.broadcast(qsubs), "sub_id")
-        .select("sub_id", "code", dot(F.col("qv"), F.col("codeword")).alias("pd"))
+        .select("sub_id", "code", dot_expr("qv", "codeword").alias("pd"))
     )
     idx = spark.read.parquet(path).filter(F.col("cell_id").isin(probes))
     per_sub = [
@@ -1103,7 +1077,7 @@ def ivfpq_query_index(
         .select(
             F.col(id_col),
             "approx_dot",
-            cosine(F.col(vec_col), q).alias("cos_sim"),
+            cosine_expr(vec_col, q).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), F.col(id_col))
         .limit(k)

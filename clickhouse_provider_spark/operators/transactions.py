@@ -14,8 +14,13 @@ spawn graph** seeded by chunk transactions —
 
 iterated to fixpoint (NEAR receipt DAGs are shallow — depth ≈ promise-chain
 length, so a handful of joins; each join shuffles on uniformly-hashed
-receipt ids, no skew). Every per-tx property the reference accumulates
-imperatively is then a groupBy over the mapped units:
+receipt ids, no skew). :func:`spawn_closure` is the one implementation of
+that iteration: backfill runs it from the seed pairs (:func:`receipt_to_tx`),
+and the streaming router (streaming/keyed_assembly.py) runs it per
+micro-batch from its carried routing state ∪ the batch's seed pairs — the
+incremental query is the batch query over the new data. Every per-tx
+property the reference accumulates imperatively is then a groupBy over the
+mapped units:
 
 - pending_receipt_ids empty  ⇔  every mapped receipt has an outcome row
   (and every consumed data_id has a data receipt) — the completeness gate
@@ -23,10 +28,11 @@ imperatively is then a groupBy over the mapped units:
 - receipts/data_receipts arrays  ⇔  collect_list sorted by processing
   order (block, shard, position)
 
-The streaming port (streaming/) runs the same relations incrementally per
-micro-batch with carried-over state tables; the reference's
-catch-up/panic policy (#23) maps to the ``incomplete`` output instead of
-a panic.
+The streaming form (streaming/keyed_assembly.py) carries the TxCache
+relations in versioned state, completes transactions in a keyed-state
+assembler and writes them through the shared :func:`fan_out`; the
+reference's catch-up/panic policy (#23) maps to the ``incomplete`` output
+instead of a panic.
 """
 
 from __future__ import annotations
@@ -104,21 +110,34 @@ CONTINUITY_BUCKET = 1_000_000  # heights per continuity partition
 
 
 def chain_violations(blocks: DataFrame, bucket: int = CONTINUITY_BUCKET) -> DataFrame:
-    """Chain-continuity assertion as a relation (reference asserts
-    prev_hash linkage, transactions.rs:185-191 / main.rs:161-170): rows
-    where a block's prev_hash does not match the previous block's hash.
+    """Chain-continuity assertion over raw blocks (reference asserts
+    prev_hash linkage, transactions.rs:185-191 / main.rs:161-170); see
+    :func:`link_violations`."""
+    h = F.col("block.header")
+    return link_violations(
+        blocks.select(
+            h["height"].alias("block_height"),
+            h["hash"].alias("block_hash"),
+            h["prev_hash"].alias("prev_hash"),
+        ),
+        bucket,
+    )
+
+
+def link_violations(links: DataFrame, bucket: int = CONTINUITY_BUCKET) -> DataFrame:
+    """The continuity check as a relation over ``(block_height,
+    block_hash, prev_hash)`` rows: rows where a block's prev_hash does
+    not match the previous stored block's hash. A missing height also
+    surfaces (its successor's prev_hash can't match the hash of the
+    block before the gap). Shared by :func:`chain_violations` (raw
+    blocks) and ``maintenance.detect_fork`` (the stored blocks table).
 
     Fully parallel at 100 TB: the lag window is partitioned by height
     bucket (never a single-task global sort); bucket boundaries are
     checked over the tiny per-bucket summary relation (one row per
     non-empty bucket, so its ordered window is a bounded single task
     over ~n_blocks/bucket rows)."""
-    h = F.col("block.header")
-    df = blocks.select(
-        h["height"].alias("block_height"),
-        h["hash"].alias("block_hash"),
-        h["prev_hash"].alias("prev_hash"),
-    ).withColumn("bucket", F.floor(F.col("block_height") / F.lit(bucket)))
+    df = links.withColumn("bucket", F.floor(F.col("block_height") / F.lit(bucket)))
 
     w = W.partitionBy("bucket").orderBy("block_height")
     within = (
@@ -292,31 +311,44 @@ def data_receipt_violations(blocks: DataFrame) -> DataFrame:
     )
 
 
-def receipt_to_tx(
-    seeds: DataFrame,
-    outcomes: DataFrame,
-    max_iterations: int = 50,
-    track: list | None = None,
-) -> DataFrame:
-    """The transitive-closure fixpoint (module doc): (receipt_id, tx_hash)
-    for every receipt reachable from a seed transaction.
-
-    Each iteration is one shuffle join frontier⋈outcomes on receipt_id;
-    localCheckpoint cuts the growing lineage. Iterations = receipt-DAG
-    depth (promise chains), independent of data volume.
-
-    ``track`` (a list) receives every checkpoint made here, the returned
-    mapping included; free them with ``operators.release`` once the last
-    action over the mapping has run (its lineage ends at them)."""
-    mapping = seeds.select(
+def seed_pairs(seeds: DataFrame) -> DataFrame:
+    """M₀ (module doc): distinct (receipt_id, tx_hash) for every receipt
+    a chunk transaction's outcome registers."""
+    return seeds.select(
         F.explode("seed_receipt_ids").alias("receipt_id"), "tx_hash"
     ).distinct()
-    spawns = outcomes.select(
+
+
+def spawn_edges(outcomes: DataFrame) -> DataFrame:
+    """The spawn graph: (receipt_id, child_id) for every receipt an
+    execution outcome spawns."""
+    return outcomes.select(
         "receipt_id", F.explode("spawned_receipt_ids").alias("child_id")
     )
-    frontier = checkpoint(mapping, track)
-    mapping = frontier
-    for _ in range(max_iterations):
+
+
+def spawn_closure(
+    start: DataFrame, spawns: DataFrame, track: list | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """The transitive-closure fixpoint (module doc): extend the
+    (receipt_id, tx_hash) mapping ``start`` along ``spawns``
+    (:func:`spawn_edges`) until no new pair appears. Returns the full
+    mapping and the pairs added to ``start``.
+
+    Each round is one shuffle join frontier⋈spawns on receipt_id;
+    localCheckpoint cuts the growing lineage. Rounds = receipt-DAG depth
+    (promise chains), independent of data volume. The loop terminates:
+    the left-anti join against the mapping means every round that does
+    not stop adds at least one new pair, out of the finite set of
+    (spawned receipt, tx) pairs.
+
+    ``track`` (a list) receives every checkpoint made here, the returned
+    relations included; free them with ``operators.release`` once the
+    last action over them has run (their lineage ends at them)."""
+    mapping = checkpoint(start, track)
+    frontier = mapping
+    added = mapping.limit(0)
+    while True:
         children = checkpoint(
             frontier.join(spawns, "receipt_id")
             .select(F.col("child_id").alias("receipt_id"), "tx_hash")
@@ -325,10 +357,19 @@ def receipt_to_tx(
             track,
         )
         if children.isEmpty():
-            break
+            return mapping, added
         mapping = checkpoint(mapping.union(children), track)
+        added = added.union(children)
         frontier = children
-    return mapping
+
+
+def receipt_to_tx(
+    seeds: DataFrame, outcomes: DataFrame, track: list | None = None
+) -> DataFrame:
+    """(receipt_id, tx_hash) for every receipt reachable from a seed
+    transaction: :func:`spawn_closure` from the seed pairs. ``track``: as
+    there."""
+    return spawn_closure(seed_pairs(seeds), spawn_edges(outcomes), track)[0]
 
 
 def mapping_violations(mapping: DataFrame) -> DataFrame:
@@ -483,10 +524,10 @@ def assemble_from_parts(
     block_info: DataFrame,
     track: list | None = None,
 ) -> dict[str, DataFrame]:
-    """Assembly over pre-extracted relations — the incremental/streaming
-    entry point (streaming/ unions carried-over state into each part).
+    """Assembly over pre-extracted relations (:func:`assemble` extracts
+    them from blocks; the bench times this half over materialized parts).
     ``block_info``: (block_height, block_hash, block_timestamp) for every
-    block a tx may span (streaming reads it from the blocks table).
+    block a tx may span.
 
     Shared intermediates (the receipt→tx mapping, the consumed-data
     relation, the complete-tx seed slice, and :func:`fan_out`'s correlated
@@ -498,11 +539,11 @@ def assemble_from_parts(
     persisted intermediate and every checkpoint of the
     :func:`receipt_to_tx` fixpoint, and free them with
     ``operators.release`` after the consuming actions — long-running
-    callers (streaming/pipeline.py's per-micro-batch body, the bench
-    loop) MUST, or the CacheManager accumulates four cached plans and
-    the block manager a few checkpoints per batch for the life of the
-    session. One-shot batch callers may omit ``track``; their caches die
-    with the session."""
+    callers (``storage.ingest_batch`` per commit, the bench loop) MUST,
+    or the CacheManager accumulates four cached plans and the block
+    manager a few checkpoints per batch for the life of the session.
+    One-shot batch callers may omit ``track``; their caches die with the
+    session."""
     # persist() returns the fixpoint's last checkpoint itself, which
     # receipt_to_tx has already put on ``track``
     mapping = receipt_to_tx(seeds, outcomes, track=track).persist()
@@ -566,9 +607,6 @@ def assemble_from_parts(
         track=track,
     )
     out["incomplete"] = incomplete
-    # the already-persisted receipt→tx closure, exposed so callers
-    # (streaming/pipeline.py) never rerun the fixpoint per micro-batch
-    out["mapping"] = mapping
     return out
 
 
@@ -580,9 +618,11 @@ def fan_out(
     track: list | None = None,
 ) -> dict[str, DataFrame]:
     """The 4-table fan-out over already-correlated units of COMPLETE txs
-    (reference commit path, transactions.rs:354-441). Shared by the batch/
-    relational assembly and the keyed-state streaming assembly — both
-    produce the same relations, only the correlation machinery differs.
+    (reference commit path, transactions.rs:354-441). Shared by the batch
+    assembly (:func:`assemble_from_parts`) and the keyed-state streaming
+    assembler — both produce the same relations; the receipt→tx closure
+    is :func:`spawn_closure` in both, only the completion gate differs
+    (one relational pass here, per-key state there).
 
     ``complete_txs``: tx_seeds rows filtered to complete transactions.
     ``mapped_units``: outcome_units columns + ``tx_hash`` (complete or

@@ -1055,7 +1055,7 @@ def q_knn_label_accuracy(spark, t):
     # embeddings scan serialized all of it into ONE task (measured 1.4 s
     # single-task CPU at sf0.1); no-op on well-split inputs
     v = spread_scan(t["embeddings"], "vec_id").withColumn(
-        "v_norm", similarity.norm(F.col("embedding"))
+        "v_norm", F.expr(similarity.norm_sql("embedding"))
     )
     q = v.filter(F.col("vec_id") % 20 == 0).select(
         F.col("vec_id").alias("q_id"),
@@ -1070,9 +1070,9 @@ def q_knn_label_accuracy(spark, t):
             "true_label",
             "vec_id",
             "label",
-            (
-                similarity.dot(F.col("embedding"), F.col("qe"))
-                / F.nullif(F.col("v_norm") * F.col("q_norm"), F.lit(0.0))
+            F.expr(
+                f"{similarity.dot_sql('embedding', 'qe')}"
+                " / nullif(v_norm * q_norm, 0.0D)"
             ).alias("cos_sim"),
         )
     )

@@ -66,7 +66,7 @@ SQL_DOT = "list_dot_product({a}, {b})"
 
 
 def _cos_sql(a: str, b: str) -> str:
-    # nullif mirrors operators/similarity.cosine: zero vectors yield NULL
+    # nullif mirrors operators/similarity.cosine_sql: zero vectors yield NULL
     # (not a crash / inf), and NULLS LAST under DESC agrees cross-engine
     return (
         f"list_dot_product({a}, {b}) / "

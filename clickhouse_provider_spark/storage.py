@@ -279,9 +279,8 @@ def ingest_batch(blocks: DataFrame, warehouse: str, mode: str = "append") -> dic
     track: list[DataFrame] = []
     act = extract_tables(blocks, track=track)
     txs = assemble(blocks, track=track)
-    diagnostics = {"incomplete", "mapping"}
     try:
-        for name, df in {**act, **{k: v for k, v in txs.items() if k not in diagnostics}}.items():
+        for name, df in {**act, **{k: v for k, v in txs.items() if k != "incomplete"}}.items():
             paths[name] = write_table(df, warehouse, name, mode=mode)
     finally:
         release(track)

@@ -12,11 +12,13 @@ but not yet executed (tx_hash_for_receipt with remove-on-use,
 transactions.rs:584-595), ``outcome_wait`` = outcomes that arrived before
 their mapping (out-of-order tolerance), ``data_wait``/``consume_wait`` =
 unmatched data receipts / data dependencies (insert_data_receipt,
-transactions.rs:612-654). Each batch runs the spawn-graph fixpoint over
-the BATCH's outcomes only, seeded by routing ∪ the batch's seeds — cost
-∝ batch size + one hash join against routing, never the total in-flight
-history (the round-1 pipeline re-ran the full assembly over state∪batch
-every micro-batch). Emits tx_hash-tagged unit rows:
+transactions.rs:612-654). Each batch calls the batch path's closure,
+``operators.transactions.spawn_closure``, over the BATCH's (plus
+waiting) outcomes only, started from routing ∪ the batch's seed pairs —
+the incremental query is the batch query over the new data, and the
+pairs the closure adds are the batch's new mappings. Cost ∝ batch size +
+one hash join against routing, never the total in-flight history.
+Emits tx_hash-tagged unit rows:
 
     seed  — the chunk transaction payload        (registers the tx)
     map   — receipt_id r belongs to tx T          (raises expected count)
@@ -85,6 +87,11 @@ UNITS_SCHEMA = "tx_hash string, kind string, dedup_key string, n_deps long, unit
 EMITTED_SCHEMA = "tx_hash string, kind string, unit_json string"
 
 ROUTING_SCHEMA = "receipt_id string, tx_hash string"
+#: files per router append: the batch's units are hash-partitioned by
+#: tx_hash into this many shards (see the sharded-append note in
+#: KeyedRouter._route)
+UNIT_SHARDS = 8
+
 CONSUME_SCHEMA = (
     "tx_hash string, block_height long, shard_pos int, pos int, "
     "dep_pos int, data_id string"
@@ -110,17 +117,11 @@ class KeyedRouter:
     """Stage 1: block batches → tx_hash-tagged unit log + TxCache state."""
 
     def __init__(
-        self,
-        spark: SparkSession,
-        warehouse: str,
-        units_dir: str,
-        state_dir: str,
-        unit_shards: int = 8,
+        self, spark: SparkSession, warehouse: str, units_dir: str, state_dir: str
     ):
         self.spark = spark
         self.warehouse = warehouse
         self.units_dir = units_dir
-        self.unit_shards = unit_shards
         self.state = VersionedState(spark, state_dir)
 
     def _read(self, part: str, batch_id: int, default: DataFrame) -> DataFrame:
@@ -155,31 +156,14 @@ class KeyedRouter:
             "consume_wait", batch_id, spark.createDataFrame([], CONSUME_SCHEMA)
         )
 
-        # incremental spawn-graph fixpoint: frontier = carried routing ∪
-        # this batch's seed registrations; spawns only from THIS batch's
-        # (plus waiting) outcomes — cost ∝ new arrivals, not history
-        seed_map = seeds_b.select(
-            "tx_hash", F.explode("seed_receipt_ids").alias("receipt_id")
-        ).select("receipt_id", "tx_hash").distinct()
-        spawns = outs_all.select(
-            "receipt_id", F.explode("spawned_receipt_ids").alias("child_id")
+        # the batch closure, started from carried routing ∪ this batch's
+        # seed pairs; spawns only from THIS batch's (plus waiting)
+        # outcomes — cost ∝ new arrivals, not history
+        seed_map = TX.seed_pairs(seeds_b)
+        mapping, added = TX.spawn_closure(
+            routing.unionByName(seed_map), TX.spawn_edges(outs_all), track
         )
-        mapping = checkpoint(routing.unionByName(seed_map), track)
-        new_maps = seed_map
-        frontier = mapping
-        for _ in range(50):
-            children = checkpoint(
-                frontier.join(spawns, "receipt_id")
-                .select(F.col("child_id").alias("receipt_id"), "tx_hash")
-                .distinct()
-                .join(mapping, ["receipt_id", "tx_hash"], "left_anti"),
-                track,
-            )
-            if children.isEmpty():
-                break
-            mapping = checkpoint(mapping.union(children), track)
-            new_maps = new_maps.union(children)
-            frontier = children
+        new_maps = seed_map.union(added)
 
         mapped_exec = checkpoint(outs_all.join(mapping, "receipt_id"), track)
         outcome_wait2 = outs_all.join(mapping, "receipt_id", "left_anti")
@@ -240,7 +224,7 @@ class KeyedRouter:
             ),
         )
         # Sharded WAL append: hash-partition the batch's units by tx_hash
-        # into ``unit_shards`` files (Spark HashPartitioning =
+        # into ``UNIT_SHARDS`` files (Spark HashPartitioning =
         # pmod(hash(tx_hash), N)), one file per non-empty shard. The
         # completion gate (n_exec == n_mapped) is only sound at block
         # boundaries PER TX (the reference processes per block,
@@ -258,7 +242,7 @@ class KeyedRouter:
             seed_units.unionByName(map_units)
             .unionByName(exec_units)
             .unionByName(data_units)
-            .repartition(self.unit_shards, F.col("tx_hash"))
+            .repartition(UNIT_SHARDS, F.col("tx_hash"))
             .write.mode("append")
             .parquet(self.units_dir)
         )

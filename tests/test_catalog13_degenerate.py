@@ -8,7 +8,7 @@ ANSI mode throws DIVIDE_BY_ZERO where DuckDB returns inf/NULL, and
 negative `length(s) - 2` gram counts silently flip division signs. Every
 batch-13 entry must yield IDENTICAL rows on both engines for this
 fixture — NULL statistics, never crashes. The zero-vector row also pins
-the shared cosine guard (operators/similarity.cosine and the oracles'
+the shared cosine guard (operators/similarity.cosine_sql and the oracles'
 ``_cos_sql`` both nullif the zero-norm denominator, so a zero vector is
 NULL-similarity, sorted last, on both engines)."""
 

@@ -192,8 +192,8 @@ def test_out_of_order_unit_files_never_emit_partial_tx(spark, tmp_path_factory):
         h = b["block"]["header"]["height"]
         (src / f"block-{h:012d}.json").write_text(_json.dumps(b))
     wh = str(tmp_path_factory.mktemp("wh_reorder"))
-    # one block per router batch, ONE unit file per append (unit_shards via
-    # run_keyed_router default is per-batch; order files afterwards by hand)
+    # one block per router batch, one append (up to UNIT_SHARDS part files)
+    # per batch; order the appends afterwards by hand
     q1 = run_keyed_router(
         spark, str(src), wh,
         checkpoint=str(tmp_path_factory.mktemp("ckpt_router_ro")),

@@ -211,6 +211,14 @@ def test_detect_fork_finds_lowest_violation_and_repair_clears_it(
     ]
     storage.write_table(spark.createDataFrame(rows, schema), wh2, "blocks", bucket_size=10)
     assert maintenance.detect_fork(spark, wh2, bucket=10) == 120
+    # the same break through the pure within-bucket path (one bucket)
+    assert maintenance.detect_fork(spark, wh2) == 120
+    # a missing height at a bucket edge: 120 absent, so bucket 12 opens
+    # at 121, whose prev_hash names a block the table does not hold
+    wh3 = str(tmp_path_factory.mktemp("fork_wh3"))
+    gap = [(h, f"Hash{h}", f"Hash{h-1}", 0) for h in range(100, 130) if h != 120]
+    storage.write_table(spark.createDataFrame(gap, schema), wh3, "blocks", bucket_size=10)
+    assert maintenance.detect_fork(spark, wh3, bucket=10) == 121
 
 
 def test_analyze_stats_sidecar(spark, fragmented):

@@ -110,7 +110,7 @@ def test_ivf_filtered_topk_inprobe_equals_filtered_scan(spark):
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_vec"))
     probes = (
         qv.join(F.broadcast(cents))
-        .select("cell_id", similarity.cosine(F.col("q_vec"), F.col("centroid")).alias("c"))
+        .select("cell_id", similarity.cosine_expr("q_vec", "centroid").alias("c"))
         .orderBy(F.col("c").desc(), "cell_id").limit(2).collect()
     )
     probe_cells = {r["cell_id"] for r in probes}
@@ -118,7 +118,7 @@ def test_ivf_filtered_topk_inprobe_equals_filtered_scan(spark):
         assigned.join(allowed, "vec_id")
         .filter(F.col("cell_id").isin(list(probe_cells)) & (F.col("vec_id") != 0))
         .join(F.broadcast(qv))
-        .select("vec_id", similarity.cosine(F.col("embedding"), F.col("q_vec")).alias("cos_sim"))
+        .select("vec_id", similarity.cosine_expr("embedding", "q_vec").alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), "vec_id").limit(10).collect()
     )
     assert [(r["vec_id"], r["cos_sim"]) for r in got] == [

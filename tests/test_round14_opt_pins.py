@@ -20,12 +20,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from clickhouse_provider_spark.operators import dedup, similarity, spread_scan
-from clickhouse_provider_spark.operators.similarity import dot, norm
+from clickhouse_provider_spark.operators.similarity import dot_expr, norm_sql
 
 
 def _relational_semantic_dedup(emb, threshold, centroids):
-    """The pre-r14 join+HOF form of semantic_dedup's pair stage, kept
-    verbatim as the reference implementation for the equality pin."""
+    """The pre-r14 join+HOF form of semantic_dedup's pair stage, kept as
+    the reference implementation for the equality pin (built through the
+    SQL-string vector builders, which parse to the same fold)."""
     assigned = (
         similarity._argmax_cell(
             emb.select("vec_id", "embedding"),
@@ -37,7 +38,7 @@ def _relational_semantic_dedup(emb, threshold, centroids):
         .localCheckpoint(eager=True)
     )
     sided = assigned.select(
-        "cell_id", "vec_id", "embedding", norm(F.col("embedding")).alias("_n")
+        "cell_id", "vec_id", "embedding", F.expr(norm_sql("embedding")).alias("_n")
     )
     a = sided.select(
         "cell_id",
@@ -51,7 +52,7 @@ def _relational_semantic_dedup(emb, threshold, centroids):
         F.col("embedding").alias("_e_b"),
         F.col("_n").alias("_n_b"),
     )
-    pair_cos = dot(F.col("_e_a"), F.col("_e_b")) / F.nullif(
+    pair_cos = dot_expr("_e_a", "_e_b") / F.nullif(
         F.col("_n_a") * F.col("_n_b"), F.lit(0.0)
     )
     dropped = (

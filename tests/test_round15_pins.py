@@ -10,8 +10,8 @@
    the divergence is attested, not latent.
 
 2. bucketed_cumsum single-evaluation restructure (VERDICT r15 task 2):
-   values must stay bit-identical to the window formulation after the
-   offsets pass moved onto the shared post-shuffle relation.
+   values must stay bit-identical to the window formulation when the
+   offsets come from caller-supplied bucket totals.
 """
 
 import pytest
@@ -80,9 +80,9 @@ def test_kmeans_kernel_all_null_corpus_documented_divergence(spark):
 
 def test_bucketed_cumsum_matches_window_after_shared_shuffle(spark):
     """bucketed_cumsum stays bit-identical to the plain cumulative window
-    in ALL THREE round-15 modes (default dual-eval, single_pass shared
-    shuffle, caller-supplied bucket_totals) on grouped AND ungrouped
-    inputs, including NULL-val rows and multi-column mode."""
+    in both modes (default dual-eval, caller-supplied bucket_totals) on
+    grouped AND ungrouped inputs, including NULL-val rows and
+    multi-column mode."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
@@ -114,7 +114,6 @@ def test_bucketed_cumsum_matches_window_after_shared_shuffle(spark):
     )
     for kwargs in (
         {},
-        {"single_pass": True},
         {"bucket_totals": totals},
     ):
         got = {
@@ -147,7 +146,6 @@ def test_bucketed_cumsum_matches_window_after_shared_shuffle(spark):
     )
     for kwargs in (
         {},
-        {"single_pass": True},
         {"bucket_totals": totals_u},
     ):
         got_u = {
@@ -163,13 +161,6 @@ def test_bucketed_cumsum_matches_window_after_shared_shuffle(spark):
         }
         assert got_u == want_u, f"ungrouped mismatch for {kwargs}"
 
-    # the two doors are mutually exclusive
-    import pytest
-
-    with pytest.raises(ValueError):
-        bucketed_cumsum(
-            df, "v", "x", bucket=bkt, single_pass=True, bucket_totals=totals_u
-        )
     # a totals relation missing required columns is rejected
     with pytest.raises(ValueError):
         bucketed_cumsum(

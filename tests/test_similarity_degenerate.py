@@ -87,3 +87,56 @@ def test_pq_refuses_partial_codebooks(spark, degenerate_emb):
     tables, _ = degenerate_emb
     with pytest.raises(ValueError, match="codebooks must have exactly"):
         CATALOG["similarity_pq_topk"].build(spark, tables).collect()
+
+
+def test_query_vector_literal_matches_column_form(spark):
+    """Python query vectors reach the vector builders as SQL double-array
+    literals. Every double must round-trip bit for bit (the sign of zero,
+    NaN and ±infinity included), and cosine/dot over them must give the
+    values of the equivalent Column-API tree: F.lit doubles under the
+    same zip_with/aggregate fold."""
+    import struct
+
+    from pyspark.sql import functions as F
+
+    from clickhouse_provider_spark.operators.similarity import (
+        cosine_expr,
+        dot_expr,
+        double_array_sql,
+    )
+
+    def bits(xs):
+        return [None if x is None else struct.pack(">d", x) for x in xs]
+
+    q = [0.1, -0.0, float("nan"), float("inf"), float("-inf"), 5e-324,
+         1.7976931348623157e308, 1 / 3]
+    got = spark.sql(f"SELECT {double_array_sql(q)} AS a").collect()[0]["a"]
+    assert bits(got) == bits(q)
+
+    def col_dot(a, b):
+        return F.aggregate(
+            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+
+    def col_cos(a, b):
+        return col_dot(a, b) / F.nullif(
+            F.sqrt(col_dot(a, a)) * F.sqrt(col_dot(b, b)), F.lit(0.0)
+        )
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 2.0, 3.0]), (2, [0.0, 0.0, 0.0]), (3, [-1.0, 0.5, 0.0])],
+        "vec_id int, e array<double>",
+    )
+    for qv in ([0.1, -0.0, float("nan")], [0.1, -0.0, 0.25]):
+        qc = F.array(*[F.lit(x) for x in qv])
+        qs = double_array_sql(qv)
+        want = emb.select(
+            "vec_id", col_cos(F.col("e"), qc).alias("c"), col_dot(F.col("e"), qc).alias("d")
+        ).orderBy("vec_id").collect()
+        got = emb.select(
+            "vec_id", cosine_expr("e", qs).alias("c"), dot_expr("e", qs).alias("d")
+        ).orderBy("vec_id").collect()
+        for col in ("c", "d"):
+            assert bits([r[col] for r in got]) == bits([r[col] for r in want]), (qv, col)

@@ -210,6 +210,49 @@ def test_gcd_spawned_receipt_completes_tx(spark):
     assert {r["receipt_id"] for r in out["receipt_txs"].collect()} == {"R10", "G1", "R11"}
 
 
+def test_long_promise_chain_maps_every_receipt(spark):
+    """The closure runs to convergence: a 52-receipt promise chain
+    R1→…→R52 executed in one block maps every receipt to its tx, so the
+    tx completes with all 52 receipts (a round cap below the chain's
+    depth would leave the tail unmapped and emit the tx without it)."""
+    from clickhouse_provider_spark.schemas import BLOCK_SCHEMA
+
+    n = 52
+    outcomes = [
+        {
+            "tx_hash": "T52",
+            "receipt": FC.action_receipt(
+                f"R{i}", "alice.near", "bob.near", "alice.near", [FC.A_TRANSFER]
+            ),
+            "execution_outcome": FC.outcome(
+                f"R{i}",
+                {"SuccessValue": FC.b64("")},
+                [f"R{i + 1}"] if i < n else [],
+                block_hash="Hash300",
+            ),
+        }
+        for i in range(1, n + 1)
+    ]
+    chain = [
+        FC.block(300, [FC.shard(
+            0,
+            transactions=[FC.chunk_tx("T52", "alice.near", "bob.near", [FC.A_TRANSFER], ["R1"])],
+            outcomes=outcomes,
+        )])
+    ]
+    df = spark.read.schema(BLOCK_SCHEMA).json(
+        spark.sparkContext.parallelize([json.dumps(b) for b in chain], 1)
+    )
+    out = TX.assemble(df)
+    assert out["incomplete"].count() == 0
+    assert out["receipt_txs"].count() == n
+    (row,) = out["transactions"].collect()
+    blob = json.loads(row["transaction"])
+    assert [r["receipt"]["receipt_id"] for r in blob["receipts"]] == [
+        f"R{i}" for i in range(1, n + 1)
+    ]
+
+
 def test_chain_violations_bucket_boundary(spark):
     """The bucketed continuity check must catch a violation exactly at a
     bucket boundary (first block of a bucket vs last of the previous)."""

@@ -194,18 +194,50 @@ def scaled_tables(spark, base: dict, k: int) -> dict:
 ASSEMBLY_BASE_BLOCKS = int(os.environ.get("SPARK_GRAFT_PROBE_BLOCKS", "400"))
 
 
+def make_block(height: int, txs_per_block: int) -> dict:
+    """One synthetic block (tests/fixture_chain.py shapes): each tx
+    submits at ``height`` and its receipt executes in the NEXT block
+    (cross-block state exercised for every tx); receipts carry 2 actions +
+    an EVENT_JSON log."""
+    from tests import fixture_chain as FC
+
+    submitted = [
+        FC.chunk_tx(f"T{height}_{i}", f"user{i}.near", "app.near", [FC.A_FT_CALL], [f"R{height}_{i}"])
+        for i in range(txs_per_block)
+    ]
+    executing = []
+    if height > 100:  # receipts of the previous block's txs
+        for i in range(txs_per_block):
+            rid = f"R{height - 1}_{i}"
+            executing.append(
+                {
+                    "tx_hash": f"T{height - 1}_{i}",
+                    "receipt": FC.action_receipt(
+                        rid, f"user{i}.near", "app.near", f"user{i}.near", [FC.A_FT_CALL, FC.A_TRANSFER]
+                    ),
+                    "execution_outcome": FC.outcome(
+                        rid,
+                        {"SuccessValue": FC.b64('"1"')},
+                        [],
+                        logs=[FC.VALID_EVENT_LOG],
+                        block_hash=f"Hash{height}",
+                    ),
+                }
+            )
+    return FC.block(height, [FC.shard(0, transactions=submitted, outcomes=executing)])
+
+
 def probe_keyed_assembly(spark, k: int) -> float:
     """Replay the crown-jewel stateful tx assembly (batch fixpoint,
     operators/transactions.assemble) over ASSEMBLY_BASE_BLOCKS*k synthetic
-    blocks (tools/bench_pipeline chain shape: every receipt lands one
-    block after its tx). The assembler is the one operator whose cost is
+    blocks (:func:`make_block`: every receipt lands one block after its
+    tx). The assembler is the one operator whose cost is
     NOT a scan/shuffle composition over the test tables, so it gets its
     own input generator instead of scaled_tables."""
     import json as _json
 
     from clickhouse_provider_spark.operators.transactions import assemble
     from clickhouse_provider_spark.schemas import BLOCK_SCHEMA
-    from tools.bench_pipeline import make_block
 
     n_blocks = ASSEMBLY_BASE_BLOCKS * k
     lines = [_json.dumps(make_block(100 + i, 5)) for i in range(n_blocks)]
@@ -240,7 +272,6 @@ def probe_streaming_assembly(spark, k: int) -> float:
     import tempfile
 
     from clickhouse_provider_spark.streaming.pipeline import run_transactions_stream
-    from tools.bench_pipeline import make_block
 
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
