@@ -16,8 +16,11 @@ This package re-expresses both halves Spark-first:
                    parsing, length caps).
 - ``plans``      — the serving-layer query surface (SURVEY.md §2C) as
                    DataFrame builders over the produced tables.
-- ``streaming``  — Structured Streaming wrappers (ordered micro-batches,
-                   stateful assembly, idempotent sinks).
+- ``streaming``  — the two pipeline daemons as Structured Streaming
+                   queries: the stateless actions stream and the keyed
+                   transactions stream (router + applyInPandasWithState
+                   assembler), which reuse the batch operators per
+                   micro-batch.
 
 Everything here is built on the public Apache Spark / PySpark API.
 """

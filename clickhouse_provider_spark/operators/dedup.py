@@ -24,6 +24,8 @@ hash-min over the integers they encode).
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -126,8 +128,7 @@ def melt_bands(
     """(doc_id, band_id, band_hash): the melted banded-signature relation —
     one explode over each per-doc signature row. Shared by the pair-listing
     self-join (:func:`lsh_candidate_pairs`), the O(m)-per-bucket hub-edge
-    builder (:func:`lsh_hub_edges`), and the on-disk incremental index
-    (operators/dedup_index.py)."""
+    builder (:func:`lsh_hub_edges`)."""
     n_bands = n_hashes // band_size
     return sig.select(
         "doc_id",
@@ -267,11 +268,11 @@ def jaccard_pairs(
     Cache lifecycle (ADVICE r10): the candidate path persists two
     intermediates (the deduped pair list and the candidate-restricted
     shingles). Pass ``track`` (a list) to receive them and unpersist after
-    the consuming action — long-running callers (the continuous-curation
-    foreachBatch loop) MUST, or Spark's CacheManager accumulates one pair
-    of cached plans per call for the life of the session. One-shot
-    catalog/oracle runs may omit ``track``: their caches are reclaimed
-    with the session, which is the documented contract for those entries.
+    the consuming action — long-running callers (a foreachBatch loop)
+    MUST, or Spark's CacheManager accumulates one pair of cached plans
+    per call for the life of the session. One-shot catalog/oracle runs
+    may omit ``track``: their caches are reclaimed with the session,
+    which is the documented contract for those entries.
     """
     if pairs is not None:
         # duplicate candidate rows (e.g. raw band collisions, where one pair
@@ -462,7 +463,6 @@ def _cc_union_find(edges: list[tuple]) -> list[tuple]:
 
 def connected_components(
     pairs: DataFrame,
-    max_iterations: int = 50,
     stats: dict | None = None,
     oriented_distinct: bool = False,
     driver_max_edges: int | None = None,
@@ -568,17 +568,17 @@ def connected_components(
     if n_parts < int(sess_parts):
         spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        return _cc_fixpoint(edges, max_iterations, stats)
+        return _cc_fixpoint(edges, stats)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", sess_parts)
         spark.conf.set("spark.sql.adaptive.enabled", sess_aqe)
 
 
-def _cc_fixpoint(
-    edges: DataFrame, max_iterations: int, stats: dict | None
-) -> DataFrame:
+def _cc_fixpoint(edges: DataFrame, stats: dict | None) -> DataFrame:
     """The min-label propagation loop of :func:`connected_components`,
-    run under the caller-managed shuffle-partition scope."""
+    run under the caller-managed shuffle-partition scope. It loops until
+    no label changes: labels only fall and each is a member doc_id, so
+    the loop ends."""
     # init: one aggregation — every endpoint appears as `a` (edges carry
     # both orientations), so groupBy(a) already enumerates the distinct
     # doc_ids and min(b) is in the same pass; the former
@@ -590,7 +590,7 @@ def _cc_fixpoint(
         .select("doc_id", F.least("doc_id", "nb").alias("label"))
         .localCheckpoint(eager=True)
     )
-    for it in range(max_iterations):
+    for it in itertools.count():
         neighbor_min = (
             edges.join(labels, edges["b"] == labels["doc_id"])
             .groupBy(F.col("a").alias("doc_id"))
@@ -640,15 +640,118 @@ def _cc_fixpoint(
                 )
                 .localCheckpoint(eager=True)
             )
-        changed = new_labels.filter(F.col("_chg")).isEmpty()
+        converged = new_labels.filter(F.col("_chg")).isEmpty()
         labels = new_labels.select(
             "doc_id", F.col("new_label").alias("label")
         )
         if stats is not None:
             stats["iterations"] = it + 1  # per-call observability
-        if changed:
+        if converged:
             break
     return labels.select("doc_id", F.col("label").alias("component_id"))
+
+
+#: Above this many ids, the label-history lookups in
+#: :func:`components_delta` fall back from a pushed IN filter
+#: (rowgroup-pruning over doc_id-sorted history files) to a broadcast
+#: join over the full skinny scan — a giant IN literal costs more to
+#: plan/evaluate than the scan it would prune, and a batch that touches
+#: that many docs reads most rowgroups anyway. Matches the raised
+#: spark.sql.parquet.pushdown.inFilterThreshold (session.py).
+LABEL_PUSH_LIMIT = 1024
+
+
+def _filter_ids(df: DataFrame, col: str, ids: list):
+    """``col ∈ ids`` as a scan-pushable predicate when the list is small
+    (IN → rowgroup pruning), else a broadcast semi-join (full skinny
+    scan, no shuffle)."""
+    if len(ids) <= LABEL_PUSH_LIMIT:
+        return df.filter(F.col(col).isin(ids))
+    spark = df.sparkSession
+    id_df = spark.createDataFrame([(int(i),) for i in ids], f"{col} long")
+    return df.join(F.broadcast(id_df), col, "left_semi")
+
+
+def components_delta(
+    history: DataFrame | None,
+    new_edges: DataFrame,
+    track: list | None = None,
+) -> DataFrame:
+    """Label DELTA for one batch of verified near-dup edges against a
+    batch-keyed label-history relation: incremental connected components
+    that relabel only the components the new edges touch, instead of
+    rebuilding the whole label table.
+
+    ``history`` is the RAW delta relation (doc_id, component_id[, ...]):
+    every row any prior batch wrote, INCLUDING stale rows superseded by
+    later, smaller labels. The reader contract that makes deltas exact: a
+    doc's current label is ``min(component_id)`` over its rows, because
+    min-label CC over a growing edge set is per-doc NON-INCREASING
+    (components only ever merge, so the min reachable id only falls).
+    Docs absent from history are self-labeled by convention, as in
+    :func:`dedup_survivors`.
+
+    Stale rows cannot corrupt the relabel: a touched component's id is
+    its CURRENT min (live label), and a dead label never revives — once
+    doc A's component merged into B < A, every component containing A
+    has min ≤ B forever — so joining history rows on live touched
+    component ids picks up (a) every current member (its current-label
+    row exists) and (b) possibly docs via stale rows whose stale label
+    coincides with a live touched label, which the dead-label argument
+    rules out entirely. Extra star edges from a member's stale rows
+    connect nodes already in one component — harmless to CC.
+
+    Cost: two ID-PRUNED scans of the skinny history (touched-doc lookup,
+    member lookup — pushed IN filters over doc_id-sorted history files
+    when the touched set is small, broadcast semi-joins otherwise) plus
+    the localized fixpoint — O(edges + touched members), never a corpus
+    shuffle or rewrite. Returns (doc_id, component_id) rows to WRITE as
+    this batch's delta; callers add the batch's self rows. The resolved
+    history ∪ delta equals one-shot :func:`connected_components` over all
+    edges (``dedup_delta_labels`` in the oracle gate, and
+    tests/test_round14_pins.py).
+
+    Cache lifecycle: the distinct edge list is persisted (it feeds the
+    touched-id collect and the fixpoint). Pass ``track`` to receive it
+    and unpersist after the consuming action (see :func:`jaccard_pairs`).
+    """
+    edges = new_edges.select("doc_a", "doc_b").distinct().persist()
+    if track is not None:
+        track.append(edges)
+    if history is None:
+        return connected_components(edges).select("doc_id", "component_id")
+    touched_ids = sorted(
+        {r["doc_a"] for r in edges.select("doc_a").distinct().collect()}
+        | {r["doc_b"] for r in edges.select("doc_b").distinct().collect()}
+    )
+    hist = history.select("doc_id", "component_id")
+    # current labels of touched docs: min over their (pruned) history rows
+    comp_ids = sorted(
+        {
+            r["component_id"]
+            for r in _filter_ids(hist, "doc_id", touched_ids)
+            .groupBy("doc_id")
+            .agg(F.min("component_id").alias("component_id"))
+            .select("component_id")
+            .distinct()
+            .collect()
+        }
+    )
+    if not comp_ids:
+        return connected_components(edges).select("doc_id", "component_id")
+    members = (
+        _filter_ids(hist, "component_id", comp_ids)
+        .select("doc_id", "component_id")
+        .distinct()
+    )
+    old_star = members.filter(
+        F.col("doc_id") != F.col("component_id")
+    ).select(
+        F.col("component_id").alias("doc_a"), F.col("doc_id").alias("doc_b")
+    )
+    return connected_components(old_star.unionByName(edges)).select(
+        "doc_id", "component_id"
+    )
 
 
 def dedup_survivors(

@@ -343,13 +343,12 @@ def _argmax_cell(
 
     Round 12, two steps: the original plan row_numbered the exploded
     (vector x centroid) join — an N x n_cells shuffle+sort per
-    assignment call, which the rollover probe caught red-handed
-    (per-batch cost ROSE after re-clustering 8 -> 256 cells, the
-    opposite of the operator's purpose). A pure-DataFrame fold over a
-    broadcast centroid array removed the shuffle but ran ~2-4x SLOWER
-    end-to-end: ``aggregate``/``zip_with`` higher-order functions are
-    interpreted per element (measured ~21 us per 64-dim cosine — the
-    microbench lives in bisect/ARGMAX_r12.md). Like
+    assignment call (per-batch cost ROSE after re-clustering 8 -> 256
+    cells, the opposite of the operator's purpose). A pure-DataFrame
+    fold over a broadcast centroid array removed the shuffle but ran
+    ~2-4x SLOWER end-to-end: ``aggregate``/``zip_with`` higher-order
+    functions are interpreted per element (measured ~21 us per 64-dim
+    cosine — the microbench lives in bisect/ARGMAX_r12.md). Like
     :func:`pq_encode_arrow`, this is the deliberate "Python where
     builtins genuinely lose" exception: dense per-row linear algebra
     against a small constant is exactly the Arrow-batch + numpy shape.
@@ -576,11 +575,11 @@ def ivf_index_append(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Append one ingest batch to an EXISTING IVF layout (round 10 — the
-    ANN twin of dedup_index.lsh_index_append): new vectors are assigned
-    to the index's PERSISTED centroids (read from ``_centroids``, never
-    retrained — retraining would reshuffle the whole layout) and appended
-    as new files under their cell_id directories. Existing files are
+    """Append one ingest batch to an EXISTING IVF layout (round 10): new
+    vectors are assigned to the index's PERSISTED centroids (read from
+    ``_centroids``, never retrained — retraining would reshuffle the
+    whole layout) and appended as new files under their cell_id
+    directories. Existing files are
     never rewritten, so concurrent probes stay consistent and the append
     costs O(new vectors) regardless of index size.
 
@@ -1518,11 +1517,11 @@ def semantic_dedup(
         # applyInPandas aligns the two sides' groups by key, and an
         # int-lit a-side vs a long pmod b-side silently produces
         # LEFT-ONLY and RIGHT-ONLY groups once the children span multiple
-        # partitions — every salted pair compare vanishes (caught by the
-        # round-14 triggered-rollover probe's streaming≡batch pin at 48k
-        # vectors; the relational join form this kernel replaced inserted
-        # the int→long cast implicitly, and single-partition unit scale
-        # masked it). Pinned at multi-partition scale by
+        # partitions — every salted pair compare vanishes (caught in
+        # round 14 at 48k vectors; the relational join form this kernel
+        # replaced inserted the int→long cast implicitly, and
+        # single-partition unit scale masked it). Pinned at
+        # multi-partition scale by
         # test_semantic_dedup_kernel_salted_multipartition.
         a = a.withColumn(
             "_blk",
@@ -1532,8 +1531,7 @@ def semantic_dedup(
         join_keys = ["cell_id", "_blk"]
     else:
         join_keys = ["cell_id"]
-    # Within-cell pair compare as a COGROUPED Arrow kernel (round 14 —
-    # the batch twin of the r13 streaming `_dropped_vs_new` rewrite):
+    # Within-cell pair compare as a COGROUPED Arrow kernel (round 14):
     # the relational join evaluated one interpreted zip_with/aggregate
     # fold PER PAIR (~µs/pair — the exact cost bisect/PAIR_KERNEL_r13.md
     # measured turning a fold into a 7× cliff), and AQE coalesces the

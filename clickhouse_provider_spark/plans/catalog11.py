@@ -559,9 +559,9 @@ def q_dedup_cluster_stats(spark, t):
     "per cluster. Complements dedup_survivors, which keeps the exact "
     "all-shared-shingle closure as the oracle-checkable recall baseline "
     "— at 100 TB THIS is the plan a curation rollout runs (the baseline "
-    "pair space explodes on hot shingles), and the incremental twin "
-    "(operators/dedup_index.components_apply_edges) maintains exactly "
-    "these labels batch-over-batch. Same banding/hub recall semantics "
+    "pair space explodes on hot shingles), and operators/dedup"
+    ".components_delta maintains these labels incrementally, batch over "
+    "batch (dedup_delta_labels). Same banding/hub recall semantics "
     "as dedup_cluster_stats (stated there); oracle mirrors the hub "
     "construction and recomputes the closure with a recursive CTE.",
     tags=("llm", "dedup", "scale-path"),

@@ -93,9 +93,8 @@ def q_grouping_sets_mixed(spark, t):
     FROM s GROUP BY user_id, session_id
     """,
     doc="Sessionization (30-min inactivity gap) via lag + running sum — "
-    "the batch twin of the streaming session-window operator "
-    "(streaming/sessionize.py applyInPandasWithState). Scale: one shuffle "
-    "on user_id; windows stream within partitions.",
+    "the batch form of a session-window operator (batch entry only). "
+    "Scale: one shuffle on user_id; windows stream within partitions.",
     tags=("analytics", "window", "streaming-analog"),
 )
 def q_user_sessions(spark, t):
@@ -345,10 +344,10 @@ def q_regex_classify(spark, t):
            CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
     FROM events GROUP BY 1, 2
     """,
-    doc="Tumbling 1-hour windows per event type — the exact batch twin of "
-    "streaming/windows.windowed_event_counts (F.window is epoch-aligned "
-    "like DuckDB time_bucket; emitted as epoch-µs to sidestep timestamp "
-    "unit differences). The streaming form adds only the watermark.",
+    doc="Tumbling 1-hour windows per event type (batch entry only; "
+    "F.window is epoch-aligned like DuckDB time_bucket; emitted as "
+    "epoch-µs to sidestep timestamp unit differences). A streaming form "
+    "would add only a watermark.",
     tags=("analytics", "window", "streaming-analog"),
 )
 def q_tumbling_event_counts(spark, t):

@@ -435,7 +435,7 @@ def q_scd2_intervals(spark, t):
     "event_type, via Spark's native window(slideDuration) — each event "
     "expands to len/slide=4 epoch-aligned windows before a single "
     "aggregation shuffle (the Expand shape streaming uses for hopping "
-    "windows; batch twin of streaming/windows.py). Oracle derives the "
+    "windows; batch entry only). Oracle derives the "
     "same 4 aligned windows per event with a range(4) cross join — "
     "including negative-start windows for events within 45 min of the "
     "epoch, which Spark's window() emits (an earlier slot>=0 clause "

@@ -307,10 +307,10 @@ def q_dedup_survivors(spark, t):
     FROM documents d LEFT JOIN comp USING (doc_id)
     """.replace("WITH d AS", "WITH RECURSIVE d AS", 1),
     doc="INCREMENTAL label maintenance equals batch CC (round 14 — the "
-    "streaming curation loop's label-delta path, surfaced in the oracle "
-    "gate): documents are ingested as two waves (even doc_ids, then "
+    "label-delta path, surfaced in the oracle gate): documents are "
+    "ingested as two waves (even doc_ids, then "
     "odd), wave 1's labels become DELTA history, wave 2's edges fold in "
-    "via operators/dedup_index.components_delta (localized relabel of "
+    "via operators/dedup.components_delta (localized relabel of "
     "only touched components, O(edges + touched members) — never a "
     "corpus-wide fixpoint or rewrite), and the min(component_id) "
     "resolution over history ∪ delta must equal one-shot connected "
@@ -320,8 +320,6 @@ def q_dedup_survivors(spark, t):
     tags=("llm", "dedup"),
 )
 def q_dedup_delta_labels(spark, t):
-    from clickhouse_provider_spark.operators import dedup_index
-
     docs = t["documents"].select("doc_id", "text")
     all_pairs = dedup.jaccard_pairs(docs, threshold=0.1).select(
         "doc_a", "doc_b"
@@ -337,7 +335,7 @@ def q_dedup_delta_labels(spark, t):
     hist0 = dedup.dedup_survivors(b0, edges0, oriented_distinct=True).select(
         "doc_id", F.col("survivor_doc_id").alias("component_id")
     )
-    delta1 = dedup_index.components_delta(hist0, edges1)
+    delta1 = dedup.components_delta(hist0, edges1)
     resolved = (
         hist0.unionByName(
             b1.select("doc_id", F.col("doc_id").alias("component_id"))

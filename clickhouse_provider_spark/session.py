@@ -123,10 +123,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # Push IN filters with up to ~1k values down to parquet instead of
-        # the min/max range rewrite: the curation loops prune their
-        # doc_id/band_hash/cell_id-sorted state scans with bounded IN
-        # lists (round 14 — the operators cap their lists at the same
-        # 1024, falling back to joins/full reads above it), and a range
+        # the min/max range rewrite: dedup.components_delta prunes its
+        # doc_id-sorted label-history scans with bounded IN lists
+        # (round 14 — LABEL_PUSH_LIMIT caps them at the same 1024,
+        # falling back to a broadcast join above it), and a range
         # rewrite over scattered ids prunes nothing.
         .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
         # Parquet TIMESTAMP(NANOS) (events.ts) reads as LongType nanoseconds —

@@ -17,28 +17,48 @@ from clickhouse_provider_spark.streaming.keyed_assembly import (
 from tests import fixture_chain as FC
 
 
-@pytest.fixture(scope="module")
-def keyed_out(spark, tmp_path_factory):
+PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+STATE_STORES = "org.apache.spark.sql.execution.streaming.state."
+
+
+@pytest.fixture(
+    scope="module",
+    params=["HDFSBackedStateStoreProvider", "RocksDBStateStoreProvider"],
+    ids=["hdfs", "rocksdb"],
+)
+def keyed_out(request, spark, tmp_path_factory):
+    """The fixture chain drained through the router and the assembler,
+    with the assembler's per-tx state on the default HDFS-backed store
+    and on RocksDB (larger-than-memory state); the session's provider is
+    restored afterwards."""
     src = tmp_path_factory.mktemp("keyed_drops")
     for b in FC.make_chain():
         h = b["block"]["header"]["height"]
         (src / f"block-{h:012d}.json").write_text(json.dumps(b))
     wh = str(tmp_path_factory.mktemp("wh_keyed"))
-    # router: one block per micro-batch → cross-batch routing state is
-    # genuinely exercised (T1 spans 4 batches)
-    q1 = run_keyed_router(
-        spark, str(src), wh,
-        checkpoint=str(tmp_path_factory.mktemp("ckpt_router")),
-        max_files_per_trigger=1,
-    )
-    q1.awaitTermination(240)
-    # assembler: small file batches → per-key state crosses batches too
-    q2 = run_keyed_assembler(
-        spark, wh,
-        checkpoint=str(tmp_path_factory.mktemp("ckpt_asm")),
-        max_files_per_trigger=2,
-    )
-    q2.awaitTermination(240)
+    prev = spark.conf.get(PROVIDER, None)
+    spark.conf.set(PROVIDER, STATE_STORES + request.param)
+    try:
+        # router: one block per micro-batch → cross-batch routing state
+        # is genuinely exercised (T1 spans 4 batches)
+        q1 = run_keyed_router(
+            spark, str(src), wh,
+            checkpoint=str(tmp_path_factory.mktemp("ckpt_router")),
+            max_files_per_trigger=1,
+        )
+        q1.awaitTermination(240)
+        # assembler: small file batches → per-key state crosses batches
+        q2 = run_keyed_assembler(
+            spark, wh,
+            checkpoint=str(tmp_path_factory.mktemp("ckpt_asm")),
+            max_files_per_trigger=2,
+        )
+        q2.awaitTermination(240)
+    finally:
+        if prev is None:
+            spark.conf.unset(PROVIDER)
+        else:
+            spark.conf.set(PROVIDER, prev)
     return wh
 
 
@@ -340,9 +360,6 @@ def test_router_batch_releases_its_checkpoints(spark, tmp_path_factory):
         assert _checkpointed_rdds(spark) - before == set()
 
 
-PROVIDER = "spark.sql.streaming.stateStore.providerClass"
-
-
 @pytest.fixture(scope="module")
 def observed_drain(spark, tmp_path_factory):
     """One transactions-stream drain of the fixture chain, two block files
@@ -356,10 +373,7 @@ def observed_drain(spark, tmp_path_factory):
     prev = spark.conf.get(PROVIDER, None)
     # the session's default, set explicitly so the pin does not depend on
     # what an earlier test left behind
-    spark.conf.set(
-        PROVIDER,
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-    )
+    spark.conf.set(PROVIDER, STATE_STORES + "HDFSBackedStateStoreProvider")
     try:
         before = (_checkpointed_rdds(spark), spark.conf.get(PROVIDER))
         q = run_transactions_stream(

@@ -5,7 +5,7 @@ documented NULL-bucket exclusion of bucketed_cumsum."""
 import pytest
 from pyspark.sql import functions as F
 
-from clickhouse_provider_spark.operators import dedup, dedup_index
+from clickhouse_provider_spark.operators import dedup
 
 
 def test_cc_chain_converges_in_log_rounds(spark):
@@ -57,9 +57,9 @@ def test_hub_edges_skip_singleton_buckets_and_shingleless_docs(spark):
         assert r["doc_a"] < r["doc_b"]
 
 
-def test_components_apply_edges_merges_two_existing_components(spark):
-    """A new edge bridging two persisted components must merge them under
-    the smaller min-label and leave a third component untouched."""
+def test_components_delta_merges_two_existing_components(spark):
+    """A new edge bridging two persisted components must relabel both
+    under the smaller min-label; a third component is not in the delta."""
     labels = spark.createDataFrame(
         [(1, 1), (2, 1), (10, 10), (11, 10), (100, 100)],
         ["doc_id", "component_id"],
@@ -67,23 +67,23 @@ def test_components_apply_edges_merges_two_existing_components(spark):
     new_edges = spark.createDataFrame([(2, 11)], ["doc_a", "doc_b"])
     got = {
         r["doc_id"]: r["component_id"]
-        for r in dedup_index.components_apply_edges(labels, new_edges).collect()
+        for r in dedup.components_delta(labels, new_edges).collect()
     }
-    assert got == {1: 1, 2: 1, 10: 1, 11: 1, 100: 100}
+    assert got == {1: 1, 2: 1, 10: 1, 11: 1}
 
 
-def test_components_apply_edges_brand_new_docs(spark):
-    """Edges among docs absent from the label table create a fresh
-    component without touching any existing one."""
+def test_components_delta_brand_new_docs(spark):
+    """Edges among docs absent from the label history create a fresh
+    component; no existing component enters the delta."""
     labels = spark.createDataFrame([(1, 1), (2, 1)], ["doc_id", "component_id"])
     new_edges = spark.createDataFrame(
         [(50, 51), (51, 52)], ["doc_a", "doc_b"]
     )
     got = {
         r["doc_id"]: r["component_id"]
-        for r in dedup_index.components_apply_edges(labels, new_edges).collect()
+        for r in dedup.components_delta(labels, new_edges).collect()
     }
-    assert got == {1: 1, 2: 1, 50: 50, 51: 50, 52: 50}
+    assert got == {50: 50, 51: 50, 52: 50}
 
 
 def test_bucketed_cumsum_null_bucket_rows_excluded(spark):

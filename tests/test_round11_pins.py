@@ -1,11 +1,11 @@
 """Direct unit pins for the round-11 claims: broadcast-only SimHash hub
-verification (VERDICT r10 task 4), jaccard_pairs / components_apply_edges
+verification (VERDICT r10 task 4), jaccard_pairs / components_delta
 cache lifecycle (ADVICE r10), and the per-call CC stats contract."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from clickhouse_provider_spark.operators import dedup, dedup_index
+from clickhouse_provider_spark.operators import dedup
 
 
 @pytest.fixture(scope="module")
@@ -74,15 +74,15 @@ def test_jaccard_pairs_track_releases_caches(spark, docs):
         assert not (lvl.useMemory or lvl.useDisk or lvl.useOffHeap)
 
 
-def test_components_apply_edges_track_releases_caches(spark):
+def test_components_delta_track_releases_caches(spark):
     labels = spark.createDataFrame(
         [(1, 1), (2, 1), (10, 10)], ["doc_id", "component_id"]
     )
     edges = spark.createDataFrame([(2, 10)], ["doc_a", "doc_b"])
     track = []
-    out = dedup_index.components_apply_edges(labels, edges, track=track)
+    out = dedup.components_delta(labels, edges, track=track)
     assert {r["component_id"] for r in out.collect()} == {1}
-    assert len(track) == 2
+    assert len(track) == 1
     for df in track:
         df.unpersist(blocking=True)
         lvl = df.storageLevel

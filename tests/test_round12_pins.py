@@ -1,27 +1,13 @@
-"""Round-12 pins: generation compaction for batch-keyed curation state
-(VERDICT r11 task 5), semantic-curation generation ROLLOVER (task 4),
-and the three ADVICE r11 hardening fixes (schema-safe crash recovery,
-pack_sequences empty input, parameterized stream driver columns)."""
-
-import json
-import os
-import shutil
+"""Round-12 pins: pack_sequences empty input (ADVICE r11), the exact
+triangle skew salt of semantic_dedup (VERDICT r11 task 6) and the
+map-side cell argmax."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from clickhouse_provider_spark.operators import dedup, similarity
-from clickhouse_provider_spark.streaming import compaction, curation
-from clickhouse_provider_spark.streaming import semantic_curation as sc
+from clickhouse_provider_spark.operators import similarity
 
 TAU = 0.3
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    from clickhouse_provider_spark.session import load_tables
-
-    return load_tables(spark, "/root/testdata/sf0.001")["documents"]
 
 
 @pytest.fixture(scope="module")
@@ -31,18 +17,6 @@ def emb(spark):
     return load_tables(spark, "/root/testdata/sf0.001")["embeddings"].select(
         "vec_id", "embedding"
     )
-
-
-def _ranges(df, id_col, k):
-    """k monotone-id prefix slices (the ingest contract)."""
-    lo, hi = df.agg(F.min(id_col), F.max(id_col)).first()
-    step = (hi - lo + k) // k
-    return [
-        df.filter(
-            (F.col(id_col) >= lo + i * step) & (F.col(id_col) < lo + (i + 1) * step)
-        )
-        for i in range(k)
-    ]
 
 
 def _decision_set(df):
@@ -75,252 +49,6 @@ def test_pack_sequences_empty_input(spark):
     assert [(f.name, f.dataType) for f in out.schema.fields] == [
         (f.name, f.dataType) for f in one.schema.fields
     ]
-
-
-def test_semantic_first_batch_crash_recovery(spark, emb, tmp_path_factory):
-    """ADVICE r11: a first-batch crash that leaves the cell_index (or
-    centroids) directory created but with no committed parquet file must
-    not wedge replay on 'Unable to infer schema' — the explicit-schema
-    reads treat a data-file-less dir as empty state."""
-    root = str(tmp_path_factory.mktemp("semcrash"))
-    state = sc.SemanticCurationState(os.path.join(root, "state"), threshold=TAU)
-    os.makedirs(state.index_path)  # dir exists, zero data files
-    os.makedirs(state.centroids_path)
-    parts = _ranges(emb, "vec_id", 3)
-    sc.curate_embeddings_batch(state, parts[0], batch_id=0)  # replay
-    cents = state.centroids(spark)
-    assert cents is not None and cents.count() == 8
-    want = _decision_set(
-        similarity.semantic_dedup(parts[0], threshold=TAU, centroids=cents)
-    )
-    assert _decision_set(state.decisions(spark)) == want
-
-
-def test_run_semantic_curation_custom_columns(spark, emb, tmp_path_factory):
-    """ADVICE r11: id_col/vec_col thread from the stream driver all the
-    way through state schemas and the batch body (previously the source
-    schema was hardcoded to vec_id/embedding)."""
-    root = str(tmp_path_factory.mktemp("semcols"))
-    src = os.path.join(root, "incoming")
-    os.makedirs(src)
-    renamed = emb.select(
-        F.col("vec_id").alias("item_id"), F.col("embedding").alias("vec")
-    )
-    renamed.coalesce(1).write.parquet(os.path.join(root, "stage"))
-    import glob
-
-    shutil.move(
-        glob.glob(os.path.join(root, "stage", "*.parquet"))[0],
-        os.path.join(src, "batch_0.parquet"),
-    )
-    sc.run_semantic_curation(
-        spark,
-        src,
-        state_root=os.path.join(root, "state"),
-        checkpoint=os.path.join(root, "ckpt"),
-        threshold=TAU,
-        id_col="item_id",
-        vec_col="vec",
-    ).awaitTermination()
-    state = sc.SemanticCurationState(
-        os.path.join(root, "state"), threshold=TAU, id_col="item_id", vec_col="vec"
-    )
-    dec = state.decisions(spark)
-    assert dec.count() == emb.count()
-    assert "item_id" in dec.columns
-    want = {
-        (r["vec_id"], r["cell_id"], r["cos_to_centroid"], r["is_dropped"])
-        for r in similarity.semantic_dedup(
-            emb, threshold=TAU, n_cells=8, iters=0
-        ).collect()
-    }
-    got = {
-        (r["item_id"], r["cell_id"], r["cos_to_centroid"], r["is_dropped"])
-        for r in dec.collect()
-    }
-    assert got == want
-
-
-# ------------------------------------------------------------ compaction
-
-
-def test_compact_batch_dirs_preserves_rows(spark, tmp_path):
-    """Folding batch dirs rewrites the same rows with old batch_ids
-    collapsed onto the fold watermark; newer dirs untouched."""
-    root = str(tmp_path / "state")
-    for b in range(5):
-        spark.range(b * 10, b * 10 + 10).select(
-            F.col("id").alias("doc_id"), F.lit(f"t{b}").alias("text")
-        ).write.parquet(os.path.join(root, f"batch_id={b}"))
-    folded = compaction.compact_batch_dirs(spark, root, upto=3, sort_within=["doc_id"])
-    assert folded == 4
-    assert compaction.list_batch_ids(root) == [3, 4]
-    df = spark.read.parquet(root)
-    assert df.count() == 50
-    assert df.filter(F.col("batch_id") == 3).count() == 40  # 0-3 collapsed
-    assert df.filter(F.col("batch_id") == 4).count() == 10
-    # idempotent: re-running folds nothing further (single gen + keep)
-    assert compaction.compact_batch_dirs(spark, root, upto=3) == 0
-    # second-tier MAJOR fold (window_only=False): generations fold too
-    assert (
-        compaction.compact_batch_dirs(spark, root, upto=4, window_only=False)
-        == 2
-    )
-    assert compaction.list_batch_ids(root) == [4]
-    assert spark.read.parquet(root).count() == 50
-
-
-def test_compaction_crash_recovery_mid_protocol(spark, tmp_path):
-    """Crash between source-deletion steps: the manifest + completed tmp
-    carry everything needed; recover_compaction finishes the protocol and
-    no row is lost."""
-    root = str(tmp_path / "state")
-    for b in range(4):
-        spark.range(b * 10, b * 10 + 10).select(
-            F.col("id").alias("doc_id")
-        ).write.parquet(os.path.join(root, f"batch_id={b}"))
-    # replicate steps 1-2 of the protocol by hand for upto=2
-    tmp = os.path.join(root, "_compact_tmp_2")
-    spark.read.parquet(root).filter(F.col("batch_id") <= 2).drop(
-        "batch_id"
-    ).coalesce(1).write.parquet(tmp)
-    assert os.path.exists(os.path.join(tmp, "_SUCCESS"))
-    with open(os.path.join(root, "_compact_manifest_2.json"), "w") as f:
-        json.dump({"upto": 2, "sources": [f"batch_id={b}" for b in range(3)]}, f)
-    # crash mid-step-3: one source already deleted, rows now ONLY in tmp
-    shutil.rmtree(os.path.join(root, "batch_id=1"))
-    compaction.recover_compaction(root)
-    assert compaction.list_batch_ids(root) == [2, 3]
-    df = spark.read.parquet(root)
-    assert df.count() == 40
-    assert sorted(
-        r["doc_id"] for r in df.filter(F.col("batch_id") == 2).collect()
-    ) == list(range(30))
-    # orphan tmp without manifest (crash before step 2) is swept, sources kept
-    os.makedirs(os.path.join(root, "_compact_tmp_3"))
-    compaction.recover_compaction(root)
-    assert not os.path.exists(os.path.join(root, "_compact_tmp_3"))
-    assert spark.read.parquet(root).count() == 40
-
-
-def _text_batch_truth(docs_so_far):
-    cand = dedup.lsh_candidate_pairs(dedup.minhash_signatures(docs_so_far))
-    pairs = dedup.jaccard_pairs(docs_so_far, pairs=cand, threshold=0.1).select(
-        "doc_a", "doc_b"
-    )
-    return dedup.dedup_survivors(docs_so_far, pairs).select(
-        "doc_id", F.col("survivor_doc_id").alias("component_id")
-    )
-
-
-def test_text_curation_with_compaction_equals_batch(spark, docs, tmp_path_factory):
-    """The labels invariant holds ACROSS compaction folds: 6 batches with
-    compact_every=2/keep_last=1 fold the band index + text sidecar
-    repeatedly mid-stream, and the final labels still equal batch truth
-    (candidate probes keep seeing every historical row)."""
-    root = str(tmp_path_factory.mktemp("curcompact"))
-    state = curation.CurationState(
-        os.path.join(root, "state"), compact_every=2, keep_last=1
-    )
-    parts = [docs.filter(F.col("doc_id") % 6 == r) for r in range(6)]
-    for b, p in enumerate(parts):
-        curation.curate_batch(state, p, batch_id=b)
-    got = {
-        (r["doc_id"], r["component_id"]) for r in state.labels(spark).collect()
-    }
-    want = {
-        (r["doc_id"], r["component_id"])
-        for r in _text_batch_truth(docs).collect()
-    }
-    assert got == want
-    # dirs actually folded, WINDOW-scoped: fold at b=2 made gen 1 from
-    # [0,1]; fold at b=4 made gen 3 from [2,3] (gen 1 never re-read)
-    assert compaction.list_batch_ids(state.index_path) == [1, 3, 4, 5]
-    assert compaction.list_batch_ids(
-        state.index_path, skip_generations=True
-    ) == [4, 5]
-    assert compaction.list_batch_ids(
-        os.path.join(state.index_path, "_texts")
-    ) == [1, 3, 4, 5]
-
-
-def test_semantic_curation_with_compaction_equals_batch(
-    spark, emb, tmp_path_factory
-):
-    """Semantic twin: decisions stay equal to batch SemDeDup across
-    index folds (every prior member still visible to the cell-pruned
-    compare)."""
-    root = str(tmp_path_factory.mktemp("semcompact"))
-    state = sc.SemanticCurationState(
-        os.path.join(root, "state"), threshold=TAU, compact_every=2, keep_last=1
-    )
-    parts = _ranges(emb, "vec_id", 6)
-    for b, p in enumerate(parts):
-        sc.curate_embeddings_batch(state, p, batch_id=b)
-    cents = state.centroids(spark)
-    want = _decision_set(
-        similarity.semantic_dedup(emb, threshold=TAU, centroids=cents)
-    )
-    assert _decision_set(state.decisions(spark)) == want
-    assert compaction.list_batch_ids(state.index_path) == [1, 3, 4, 5]
-
-
-# -------------------------------------------------------------- rollover
-
-
-def test_rollover_generation_carries_decisions_and_recells(
-    spark, emb, tmp_path_factory
-):
-    """VERDICT r11 task 4: rollover re-clusters the accumulated corpus
-    into a finer generation, carries decisions verbatim, and the
-    continued stream computes exact SemDeDup over the NEW cells: a
-    post-rollover vector is dropped iff some lower-id vector (any
-    generation) shares its new cell at cosine >= tau."""
-    root = str(tmp_path_factory.mktemp("semroll"))
-    parts = _ranges(emb, "vec_id", 4)
-    gen1 = sc.SemanticCurationState(
-        os.path.join(root, "gen1"), threshold=TAU, n_cells=4
-    )
-    sc.curate_embeddings_batch(gen1, parts[0], batch_id=0)
-    sc.curate_embeddings_batch(gen1, parts[1], batch_id=1)
-    pre = _decision_set(gen1.decisions(spark))
-
-    gen2 = sc.rollover_generation(
-        spark, gen1, os.path.join(root, "gen2"), n_cells_new=8, iters=1
-    )
-    # boundary invariant: decisions carried over bit-identical
-    assert gen2.n_cells == 8
-    assert _decision_set(gen2.decisions(spark)) == pre
-    # the re-celled history landed below any stream batch id
-    idx = gen2.index(spark)
-    assert idx.select("batch_id").distinct().collect()[0]["batch_id"] == -1
-    assert idx.count() == parts[0].count() + parts[1].count()
-
-    # continue the stream against gen2 (fresh checkpoint => ids restart)
-    sc.curate_embeddings_batch(gen2, parts[2], batch_id=0)
-    sc.curate_embeddings_batch(gen2, parts[3], batch_id=1)
-    got = _decision_set(gen2.decisions(spark))
-    # prefix decisions still byte-stable after two more batches
-    assert pre <= got
-    assert len(got) == emb.count()
-    # post-rollover truth: batch SemDeDup over ALL vectors with the NEW
-    # centroids, restricted to post-rollover ids (keep-first only looks
-    # at lower ids, so old vectors' presence — kept OR dropped — is the
-    # only thing that matters, not their old decisions)
-    boundary = parts[1].agg(F.max("vec_id")).first()[0]
-    new_cents = gen2.centroids(spark)
-    truth_all = similarity.semantic_dedup(emb, threshold=TAU, centroids=new_cents)
-    want_post = _decision_set(truth_all.filter(F.col("vec_id") > boundary))
-    got_post = {t for t in got if t[0] > boundary}
-    assert got_post == want_post
-
-
-def test_rollover_requires_nonempty_index(spark, tmp_path_factory):
-    state = sc.SemanticCurationState(
-        str(tmp_path_factory.mktemp("semroll_empty")), threshold=TAU
-    )
-    with pytest.raises(ValueError, match="non-empty"):
-        sc.rollover_generation(spark, state, "/tmp/nowhere", n_cells_new=8)
 
 
 # ------------------------------------------------------------- skew salt

@@ -1,99 +1,11 @@
-"""Round-13 pins for the ADVICE r12 fixes: the compaction
-crash-after-rename data-loss window (high), degenerate-embedding handling
-in the map-side cell argmax (medium), the broadcast centroid matrix
-(VERDICT r12 task 5), manifest half-write sweep and parallelized rollover
-rewrite (low)."""
-
-import json
-import os
+"""Round-13 pins for the ADVICE r12 fixes: degenerate-embedding handling
+in the map-side cell argmax, the broadcast centroid matrix (VERDICT r12
+task 5) and the auto-engaged semantic_dedup skew salt."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from clickhouse_provider_spark.operators import similarity
-from clickhouse_provider_spark.streaming import compaction
-
-
-def _write_batches(spark, root, n=4, rows_per=10):
-    for b in range(n):
-        spark.range(b * rows_per, (b + 1) * rows_per).select(
-            F.col("id").alias("doc_id")
-        ).write.parquet(os.path.join(root, f"batch_id={b}"))
-
-
-# ------------------------------------------------ compaction crash windows
-
-
-def test_compaction_crash_after_rename_keeps_promoted_generation(
-    spark, tmp_path
-):
-    """ADVICE r12 (high): the manifest's source list contains
-    ``batch_id=<upto>`` — the same NAME the tmp dir is promoted to in
-    step 4. A crash between the rename and the manifest delete used to
-    make recovery rmtree the freshly PROMOTED generation (tmp gone → the
-    rename can't replay → every folded row permanently lost). Recovery
-    must recognize 'manifest present + tmp absent' as the post-rename
-    state and never delete the target."""
-    root = str(tmp_path / "state")
-    _write_batches(spark, root)
-    # run a real fold to completion (steps 1-5)
-    assert compaction.compact_batch_dirs(spark, root, upto=2) == 3
-    gen = os.path.join(root, "batch_id=2")
-    assert os.path.exists(os.path.join(gen, "_GEN"))
-    # simulate the crash window: step 4 done, step 5 (manifest delete)
-    # not — recreate the manifest exactly as step 2 wrote it
-    with open(os.path.join(root, "_compact_manifest_2.json"), "w") as f:
-        json.dump(
-            {"upto": 2, "sources": [f"batch_id={b}" for b in range(3)]}, f
-        )
-    compaction.recover_compaction(root)
-    # the promoted generation survives, the manifest is gone, no row lost
-    assert os.path.isdir(gen)
-    assert not os.path.exists(os.path.join(root, "_compact_manifest_2.json"))
-    assert compaction.list_batch_ids(root) == [2, 3]
-    df = spark.read.parquet(root)
-    assert df.count() == 40
-    assert sorted(
-        r["doc_id"] for r in df.filter(F.col("batch_id") == 2).collect()
-    ) == list(range(30))
-    # and a fresh fold over the recovered state still works end-to-end
-    assert compaction.compact_batch_dirs(spark, root, upto=3) == 0  # 1 dir
-
-
-def test_compaction_recovery_is_idempotent_after_rename_crash(
-    spark, tmp_path
-):
-    """recover_compaction may itself crash and re-run: calling it twice
-    on the post-rename state must be a no-op the second time."""
-    root = str(tmp_path / "state")
-    _write_batches(spark, root)
-    compaction.compact_batch_dirs(spark, root, upto=2)
-    for _ in range(2):
-        with open(os.path.join(root, "_compact_manifest_2.json"), "w") as f:
-            json.dump(
-                {"upto": 2, "sources": [f"batch_id={b}" for b in range(3)]},
-                f,
-            )
-        compaction.recover_compaction(root)
-        compaction.recover_compaction(root)
-        assert spark.read.parquet(root).count() == 40
-
-
-def test_compaction_manifest_tmp_orphan_swept(spark, tmp_path):
-    """ADVICE r12 (low): a crash between writing
-    ``_compact_manifest_<n>.json.tmp`` and its atomic rename used to
-    leave the .tmp file forever (the recovery regex only matches the
-    final name). The sweep removes it; sources are intact at that point
-    so nothing else moves."""
-    root = str(tmp_path / "state")
-    _write_batches(spark, root, n=2)
-    orphan = os.path.join(root, "_compact_manifest_1.json.tmp")
-    with open(orphan, "w") as f:
-        json.dump({"upto": 1, "sources": ["batch_id=0", "batch_id=1"]}, f)
-    compaction.recover_compaction(root)
-    assert not os.path.exists(orphan)
-    assert compaction.list_batch_ids(root) == [0, 1]
-    assert spark.read.parquet(root).count() == 20
 
 
 # ------------------------------------------- argmax degenerate embeddings
@@ -240,64 +152,3 @@ def test_semantic_dedup_auto_salt_exact_and_engaged(spark, emb):
         }
         plan = auto._jdf.queryExecution().optimizedPlan().toString()
         assert "_blk" in plan  # the salted block key is in the join
-
-
-# ------------------------------------------- map-side pair-compare kernel
-
-
-def test_dropped_vs_new_kernel_semantics_and_plan(spark):
-    """Round-13 kernel pin (_dropped_vs_new): the streaming loop's pair
-    compare must (a) reproduce the relational keep-first rule exactly —
-    including the NULL-on-zero-norm never-drops rule and the id_a < id_b
-    guard — and (b) stay map-side: no Exchange in the kernel's plan (the
-    r13 trigger probe caught the relational form's interpreted-HOF cost
-    turning the first window fold into a 7x per-batch cliff)."""
-    from clickhouse_provider_spark.streaming.semantic_curation import (
-        _dropped_vs_new,
-    )
-
-    # cell 0: prior 1 ~ new 10 (cos 1.0 -> drop), prior zero-vector vs
-    # new 11 (zero norm -> never drops); cell 1: new 12 alone (no prior
-    # in cell -> kept); id guard: prior 13 > new 12 must not drop 12
-    prior = spark.createDataFrame(
-        [
-            (0, 1, [1.0, 0.0]),
-            (0, 2, [0.0, 0.0]),
-            (1, 13, [0.0, 1.0]),
-        ],
-        "cell_id int, vec_id long, embedding array<double>",
-    )
-    new_rows = spark.createDataFrame(
-        [
-            (0, 10, [2.0, 0.0]),
-            (0, 11, [0.0, 0.0]),  # zero norm: NULL cosine, never dropped
-            (1, 12, [0.0, 3.0]),
-        ],
-        "cell_id int, vec_id long, embedding array<double>",
-    ).collect()
-    out = _dropped_vs_new(prior, new_rows, "vec_id", "embedding", 0.9)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    got = sorted(r["vec_id"] for r in out.collect())
-    # 10 dropped by prior 1 (cos 1.0); 11 zero-norm never drops; 12 has
-    # no lower-id cell-mate (prior 13 > 12 — the id guard)
-    assert got == [10]
-    # with the batch unioned ahead (the curate_embeddings_batch shape),
-    # the result is the same here — the intra-batch 10 -> 11 pair is
-    # blocked by 11's zero norm, pinning NULL-never-drops through the
-    # full union path too
-    both = prior.unionByName(
-        spark.createDataFrame(
-            [(0, 10, [2.0, 0.0]), (0, 11, [0.0, 0.0]), (1, 12, [0.0, 3.0])],
-            "cell_id int, vec_id long, embedding array<double>",
-        )
-    )
-    got2 = sorted(
-        r["vec_id"]
-        for r in _dropped_vs_new(
-            both, new_rows, "vec_id", "embedding", 0.9
-        ).distinct().collect()
-    )
-    assert got2 == [10]
-    # empty new side: no kernel, empty relation
-    assert _dropped_vs_new(prior, [], "vec_id", "embedding", 0.9).count() == 0

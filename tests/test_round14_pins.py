@@ -1,411 +1,26 @@
-"""Round-14 pins.
+"""Round-14 pins for incremental connected components:
+``dedup.components_delta`` relabels only the components a batch's new
+edges touch, and the min(component_id) resolution of history ∪ delta
+equals one-shot connected components over every edge."""
 
-ADVICE r13 fixes: NULL/ragged embeddings through the streaming pair
-kernel ``_dropped_vs_new`` (medium — mirrors ``_argmax_cell``'s
-degenerate contract), deterministic compare-volume over compaction-folded
-monitor history, the rollover completion marker moved OUT of compactable
-data dirs (``_ROLLED`` at the generation root).
-
-VERDICT r13 tasks 3+4: the prior-scan cell-pruned plan (pushed
-``cell_id`` filter → O(touched cells) history I/O per batch) and the
-bounded / chunked new-side kernel broadcast.
-"""
-
-import os
-
-import pytest
 from pyspark.sql import functions as F
 
-from clickhouse_provider_spark.operators import similarity
-from clickhouse_provider_spark.streaming import semantic_curation as sc
-
-TAU = 0.3
+from clickhouse_provider_spark.operators import dedup
 
 
-def _emb_df(spark, rows):
-    return spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>"
-    )
+def _resolve(rows):
+    """min(component_id) per doc over raw (doc_id, component_id) rows."""
+    out = {}
+    for d, c in rows:
+        out[d] = c if d not in out else min(out[d], c)
+    return out
 
 
-def _decisions(spark, state):
+def _one_shot(edges):
     return {
-        (r["vec_id"], r["is_dropped"])
-        for r in state.decisions(spark).collect()
+        r["doc_id"]: r["component_id"]
+        for r in dedup.connected_components(edges).collect()
     }
-
-
-# ------------------------------- ADVICE r13 (medium): degenerate vectors
-
-
-def test_streaming_null_embedding_graceful(spark, tmp_path):
-    """A NULL embedding admitted by _argmax_cell (cell 0, NULL cosine)
-    must flow through EVERY subsequent batch's pair compare without
-    crashing, and behave exactly as batch semantic_dedup does: NULL
-    never drops and is never dropped."""
-    state = sc.SemanticCurationState(str(tmp_path / "s"), threshold=TAU)
-    b0 = _emb_df(
-        spark,
-        [
-            (1, [1.0, 0.0]),
-            (2, None),  # NULL vector — lands in cell 0 via _argmax_cell
-            (3, [0.0, 1.0]),
-        ],
-    )
-    sc.curate_embeddings_batch(state, b0, batch_id=0)
-    # the NULL row is IN the index now; later batches compare against it
-    b1 = _emb_df(spark, [(10, [1.0, 0.001]), (11, None)])
-    sc.curate_embeddings_batch(state, b1, batch_id=1)
-    got = _decisions(spark, state)
-    cents = state.centroids(spark)
-    want = {
-        (r["vec_id"], r["is_dropped"])
-        for r in similarity.semantic_dedup(
-            b0.unionByName(b1), threshold=TAU, centroids=cents
-        ).collect()
-    }
-    assert got == want
-    # NULLs are kept on both sides (never dropped), and vec 10 is
-    # dropped by its near-parallel lower-id cellmate — the fixture
-    # exercises both outcomes THROUGH the null-carrying index
-    assert (2, False) in got and (11, False) in got
-    assert (10, True) in got
-
-
-def test_dropped_vs_new_ragged_vector_named_error(spark):
-    """Wrong-LENGTH vectors fail loudly with the dims named — on the
-    driver-side cell build AND the executor-side prior stack — instead
-    of np.stack's opaque shape error."""
-    prior = spark.createDataFrame(
-        [(0, 1, [1.0, 0.0])], "cell_id int, vec_id long, embedding array<float>"
-    )
-    # driver side: ragged rows within one cell's new side
-    with pytest.raises(ValueError, match="length-3 .* 2-dimensional"):
-        sc._dropped_vs_new(
-            prior,
-            [
-                {"cell_id": 0, "vec_id": 5, "embedding": [1.0, 0.0]},
-                {"cell_id": 0, "vec_id": 6, "embedding": [1.0, 0.0, 0.0]},
-            ],
-            "vec_id",
-            "embedding",
-            TAU,
-        )
-    # executor side: prior rows that don't match the new side's dims
-    ragged_prior = spark.createDataFrame(
-        [(0, 1, [1.0, 0.0, 0.0])],
-        "cell_id int, vec_id long, embedding array<float>",
-    )
-    df = sc._dropped_vs_new(
-        ragged_prior,
-        [{"cell_id": 0, "vec_id": 5, "embedding": [1.0, 0.0]}],
-        "vec_id",
-        "embedding",
-        TAU,
-    )
-    with pytest.raises(Exception, match="length-3 .* 2-dimensional"):
-        df.collect()
-
-
-def test_dropped_vs_new_all_null_new_side(spark):
-    """An all-NULL new side builds no cell matrices and returns the
-    empty relation (nothing can be dropped) instead of crashing."""
-    prior = spark.createDataFrame(
-        [(0, 1, [1.0, 0.0])], "cell_id int, vec_id long, embedding array<float>"
-    )
-    out = sc._dropped_vs_new(
-        prior,
-        [{"cell_id": 0, "vec_id": 5, "embedding": None}],
-        "vec_id",
-        "embedding",
-        TAU,
-    )
-    assert out.count() == 0
-
-
-# --------------------- VERDICT r13 task 3: cell-pruned prior scan plan
-
-
-def test_prior_scan_cell_pruned_plan(spark, tmp_path):
-    """The history side of the pair compare carries BOTH pushed
-    predicates: batch_id (partition pruning at listing) and cell_id
-    (rowgroup min/max over cell_id-sorted files). The filter must reach
-    the parquet scan — not evaluate post-scan."""
-    state = sc.SemanticCurationState(str(tmp_path / "s"), threshold=TAU)
-    b0 = _emb_df(spark, [(1, [1.0, 0.0]), (2, [0.0, 1.0])])
-    sc.curate_embeddings_batch(state, b0, batch_id=0)
-    plan = (
-        sc._pruned_prior(state.index(spark), 1, [0, 3], "vec_id", "embedding")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "In(cell_id" in plan.split("PushedFilters:")[1]
-    assert "batch_id" in plan.split("PartitionFilters:")[1].split("]")[0]
-
-
-def test_prior_scan_prune_preserves_decisions(spark, tmp_path):
-    """Cell pruning is an I/O optimization, not a semantics change:
-    decisions with the pruned scan equal batch semantic_dedup."""
-    from clickhouse_provider_spark.session import load_tables
-
-    emb = load_tables(spark, "/root/testdata/sf0.001")["embeddings"].select(
-        "vec_id", "embedding"
-    )
-    state = sc.SemanticCurationState(
-        str(tmp_path / "s"), threshold=TAU, n_cells=8
-    )
-    parts = [
-        emb.filter(F.col("vec_id") < 200),
-        emb.filter(F.col("vec_id") >= 200),
-    ]
-    for b, p in enumerate(parts):
-        sc.curate_embeddings_batch(state, p, batch_id=b)
-    cents = state.centroids(spark)
-    got = _decisions(spark, state)
-    want = {
-        (r["vec_id"], r["is_dropped"])
-        for r in similarity.semantic_dedup(
-            emb, threshold=TAU, centroids=cents
-        ).collect()
-    }
-    assert got == want
-
-
-# ------------------- VERDICT r13 task 4: bounded/chunked kernel broadcast
-
-
-def test_chunked_kernel_equals_single(spark, tmp_path, monkeypatch):
-    """A micro-batch over KERNEL_BROADCAST_BUDGET_BYTES runs the kernel
-    in new-side chunks against the SAME compare side — decisions must be
-    bit-identical to the unchunked path (keep-first consults the full
-    compare side for every chunk)."""
-    from clickhouse_provider_spark.session import load_tables
-
-    emb = load_tables(spark, "/root/testdata/sf0.001")["embeddings"].select(
-        "vec_id", "embedding"
-    )
-    roots = {}
-    # 16 KiB budget → 7 + 10 uneven chunks for the 200/300-vector batches
-    # (64-dim ≈ 512 B/vec) — exercises the multi-chunk path exactly like
-    # the old 64 B budget did, without the 500 single-vector kernel jobs
-    # that made this pin ~70 s of wall for no extra coverage
-    for name, budget in (("one", None), ("chunked", 16384)):
-        if budget is not None:
-            monkeypatch.setattr(sc, "KERNEL_BROADCAST_BUDGET_BYTES", budget)
-        state = sc.SemanticCurationState(
-            str(tmp_path / name), threshold=TAU, n_cells=8
-        )
-        for b, p in enumerate(
-            [emb.filter(F.col("vec_id") < 200), emb.filter(F.col("vec_id") >= 200)]
-        ):
-            sc.curate_embeddings_batch(state, p, batch_id=b)
-        roots[name] = {
-            tuple(r)
-            for r in state.decisions(spark)
-            .select("vec_id", "cell_id", "cos_to_centroid", "is_dropped")
-            .collect()
-        }
-    assert roots["one"] == roots["chunked"]
-    assert any(d for (_, _, _, d) in roots["one"])
-
-
-# --------------- ADVICE r13 (low): folded monitor compare-volume ties
-
-
-def test_compare_volume_deterministic_after_fold(spark, tmp_path):
-    """After compaction folds several batches' monitor rows onto one
-    batch_id, multiple rows per (cell_id, batch_id) exist; the volume
-    window must pre-aggregate them (one row per key) so folded history
-    reports deterministic MERGED volume, not row-order-dependent
-    same-batch tie counting."""
-    from clickhouse_provider_spark.session import load_tables
-
-    emb = load_tables(spark, "/root/testdata/sf0.001")["embeddings"].select(
-        "vec_id", "embedding"
-    )
-    parts = [
-        emb.filter(F.col("vec_id") < 120),
-        emb.filter((F.col("vec_id") >= 120) & (F.col("vec_id") < 240)),
-        emb.filter((F.col("vec_id") >= 240) & (F.col("vec_id") < 360)),
-        emb.filter(F.col("vec_id") >= 360),
-    ]
-    # compact_every=2, keep_last=1 → batch 2 folds monitor ids {0,1}→1
-    state = sc.SemanticCurationState(
-        str(tmp_path / "s"), threshold=TAU, n_cells=4,
-        compact_every=2, keep_last=1,
-    )
-    for b, p in enumerate(parts):
-        sc.curate_embeddings_batch(state, p, batch_id=b)
-    mon = state.monitor(spark)
-    folded = (
-        mon.groupBy("cell_id", "batch_id").count().filter("count > 1").count()
-    )
-    assert folded > 0, "fixture must actually produce folded monitor ties"
-    vol = {
-        r["batch_id"]: r["compare_pairs"]
-        for r in sc.batch_compare_volume(spark, state).collect()
-    }
-    # independent recomputation off the PRE-AGGREGATED counts
-    agg = {
-        (r["batch_id"], r["cell_id"]): r["n"]
-        for r in mon.groupBy("cell_id", "batch_id")
-        .agg(F.sum("n_new").alias("n"))
-        .collect()
-    }
-    pops: dict[int, int] = {}
-    want: dict[int, int] = {}
-    for b in sorted({k[0] for k in agg}):
-        want[b] = sum(
-            n * pops.get(c, 0) for (bb, c), n in agg.items() if bb == b
-        )
-        for (bb, c), n in agg.items():
-            if bb == b:
-                pops[c] = pops.get(c, 0) + n
-    assert vol == want
-    # total volume is conserved by the fold: equals the unfolded truth
-    # EXCEPT pairs between batches folded onto the same id (merged away)
-    assert vol[3] > vol[2] > 0
-
-
-# ----------- ADVICE r13 (low): _ROLLED completion marker at the gen root
-
-
-def test_rolled_marker_survives_major_monitor_fold(
-    spark, tmp_path, monkeypatch
-):
-    """A second-tier major fold (window_only=False) over a rolled
-    generation's monitor folds batch_id=-1 — and with it the legacy
-    in-data _GEN marker. Resume discovery must still find the rolled
-    generation via the root-level _ROLLED marker (written last, outside
-    any compactable data dir)."""
-    from clickhouse_provider_spark.session import load_tables
-    from clickhouse_provider_spark.streaming import compaction
-
-    monkeypatch.setattr(sc, "TARGET_CELL_POP", 10)  # threshold 40
-    emb = load_tables(spark, "/root/testdata/sf0.001")["embeddings"].select(
-        "vec_id", "embedding"
-    )
-    import glob
-    import shutil
-
-    root = str(tmp_path)
-    src = os.path.join(root, "incoming")
-    os.makedirs(src)
-    base = os.path.join(root, "gens")
-    ckpt = os.path.join(root, "ckpt")
-
-    def drop(i, p):
-        d = os.path.join(root, f"stage_{i}")
-        p.coalesce(1).write.parquet(d)
-        f = glob.glob(os.path.join(d, "*.parquet"))[0]
-        shutil.move(f, os.path.join(src, f"batch_{i}.parquet"))
-        shutil.rmtree(d)
-
-    drop(0, emb.filter(F.col("vec_id") < 250))
-    # one wave over the threshold → the driver rolls to gen1
-    state, log = sc.run_semantic_curation_generations(
-        spark, src, base, ckpt,
-        threshold=TAU, n_cells=8, max_files_per_trigger=1,
-    )
-    assert state.root.endswith("gen1")
-    assert os.path.exists(os.path.join(base, "gen1", "_ROLLED"))
-    # drain one real batch into gen1 so the fold has a higher id to
-    # collapse batch_id=-1 onto
-    drop(1, emb.filter((F.col("vec_id") >= 250) & (F.col("vec_id") < 300)))
-    state, _ = sc.run_semantic_curation_generations(
-        spark, src, base, ckpt,
-        threshold=TAU, n_cells=8, max_files_per_trigger=1,
-        roll_factor=10**9,
-    )
-    assert state.root.endswith("gen1")
-    gen1 = sc.SemanticCurationState(
-        os.path.join(base, "gen1"), threshold=TAU
-    )
-    # major fold of gen1's monitor: batch_id=-1 (with its legacy _GEN
-    # marker) folds away — exactly the ADVICE r13 hazard
-    mon = gen1.monitor_path
-    ids_before = compaction.list_batch_ids(mon)
-    assert -1 in ids_before and max(ids_before) > -1
-    folded = compaction.compact_batch_dirs(
-        spark, mon, upto=10**9, window_only=False, min_dirs=1
-    )
-    assert folded == len(ids_before)
-    assert -1 not in compaction.list_batch_ids(mon)
-    # discovery still resumes into gen1, not gen0
-    drop(2, emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 350)))
-    state2, _ = sc.run_semantic_curation_generations(
-        spark, src, base, ckpt,
-        threshold=TAU, n_cells=8, max_files_per_trigger=1,
-        roll_factor=10**9,
-    )
-    assert state2.root.endswith("gen1")
-    # populations survived the fold (rows preserved, ids collapsed)
-    total = sum(
-        r["population"]
-        for r in sc.cell_populations(spark, state2).collect()
-    )
-    assert total == 350
-
-
-# ===================== round 14: text-curation O(corpus) term removal
-
-
-def _mini_docs(spark, ids_words):
-    return spark.createDataFrame(
-        [(i, w) for i, w in ids_words], "doc_id long, text string"
-    )
-
-
-def test_bloom_sketch_membership():
-    """No false negatives ever; false positives rare at ~10 bits/key."""
-    import numpy as np
-
-    from clickhouse_provider_spark.operators import dedup_index as di
-
-    keys = [f"0|{i}" for i in range(5000)]
-    m = di._bloom_size(len(keys))
-    bits = np.zeros(m // 8 + 1, dtype=np.uint8)
-    h1, h2 = di._bloom_hashes(keys)
-    di._bloom_set(bits, di._bloom_positions(h1, h2, m))
-    assert di._bloom_test(bits, di._bloom_positions(h1, h2, m)).all()
-    other = [f"1|{i}" for i in range(5000)]
-    o1, o2 = di._bloom_hashes(other)
-    fp = di._bloom_test(bits, di._bloom_positions(o1, o2, m)).mean()
-    assert fp < 0.05
-
-
-def test_probe_skips_unmatching_dirs_entirely(spark, tmp_path):
-    """The sharpest possible pruning pin: delete a history dir's parquet
-    DATA (keep its Bloom sidecar). A probe whose batch shares no band
-    hash with that dir must never construct a read over it — the
-    candidate job succeeds and returns the exact intra-batch pairs. The
-    pre-r14 full-index scan would throw on the missing files."""
-    import glob
-
-    from clickhouse_provider_spark.operators import dedup_index as di
-
-    path = str(tmp_path / "index")
-    b0 = _mini_docs(
-        spark,
-        [(i, " ".join(f"alpha{i}w{j}" for j in range(30))) for i in range(20)],
-    )
-    # batch 1: two identical docs (a guaranteed intra-batch candidate)
-    # in a vocabulary disjoint from batch 0
-    text = " ".join(f"beta{j}" for j in range(30))
-    b1 = _mini_docs(spark, [(100, text), (101, text)])
-    di.lsh_index_append(b0, path, batch_id=0)
-    keys1 = di.lsh_index_append(b1, path, batch_id=1)
-    for f in glob.glob(os.path.join(path, "batch_id=0", "**", "*.parquet"),
-                       recursive=True):
-        os.remove(f)
-    got = {
-        (r["doc_a"], r["doc_b"])
-        for r in di.lsh_new_candidates(
-            spark, path, batch_id=1, new_keys=keys1
-        ).collect()
-    }
-    assert got == {(100, 101)}
 
 
 def test_components_delta_with_stale_history_rows(spark):
@@ -415,8 +30,6 @@ def test_components_delta_with_stale_history_rows(spark):
     merged → all labeled 1 (doc 3's stale (3,2) row remains). A new
     edge (4,3) must pull the WHOLE live component {1,2,3} and label
     everyone 1."""
-    from clickhouse_provider_spark.operators import dedup_index as di
-
     hist = spark.createDataFrame(
         [(1, 1, 0), (2, 2, 0), (3, 2, 0),  # batch 0: {1}, {2,3}
          (2, 1, 1), (3, 1, 1)],            # batch 1 delta: merged into 1
@@ -425,211 +38,79 @@ def test_components_delta_with_stale_history_rows(spark):
     edges = spark.createDataFrame([(3, 4)], "doc_a long, doc_b long")
     got = {
         (r["doc_id"], r["component_id"])
-        for r in di.components_delta(hist, edges).collect()
+        for r in dedup.components_delta(hist, edges).collect()
     }
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1)}
 
 
-def test_components_delta_equals_apply_edges(spark, tmp_path):
-    """On a resolved-history baseline the delta path must agree with the
-    r10 full-table path (components_apply_edges) for every touched doc,
-    and leave untouched docs out of the delta (they keep their rows)."""
-    from clickhouse_provider_spark.operators import dedup_index as di
+def test_components_delta_equals_one_shot_components(spark):
+    """The resolved history ∪ delta equals one-shot connected_components
+    over all edges, on two inputs.
 
-    labels = spark.createDataFrame(
-        [(i, i - (i % 3)) for i in range(30)],
-        "doc_id long, component_id long",
+    1. A resolved-history baseline (components {0,1,2}, {3,4,5}, ...)
+       plus three new edges: the delta is localized to the touched
+       components and the brand-new docs.
+    2. Three ingest batches of the sf0.01 documents (doc_id mod 3), whose
+       Jaccard-verified edges arrive batch by batch: after every batch
+       the resolved labels equal batch dedup_survivors over every doc
+       ingested so far."""
+    # -- 1: synthetic resolved history
+    labels = [(i, i - (i % 3)) for i in range(30)]
+    hist = spark.createDataFrame(
+        labels, "doc_id long, component_id long"
+    ).withColumn("batch_id", F.lit(0))
+    new = [(0, 3), (12, 27), (40, 41)]
+    old_star = [(c, d) for d, c in labels if d != c]
+    want = _one_shot(
+        spark.createDataFrame(old_star + new, "doc_a long, doc_b long")
     )
-    hist = labels.withColumn("batch_id", F.lit(0))
-    edges = spark.createDataFrame(
-        [(0, 3), (12, 27), (40, 41)], "doc_a long, doc_b long"
-    )
-    full = {
+    delta = [
         (r["doc_id"], r["component_id"])
-        for r in di.components_apply_edges(labels, edges).collect()
-    }
-    delta = {
-        (r["doc_id"], r["component_id"])
-        for r in di.components_delta(hist, edges).collect()
-    }
-    assert delta <= full
-    touched_docs = {d for (d, c) in delta}
-    # resolved view after applying the delta == the full-table result
-    resolved = {
-        (d, c) for (d, c) in full if d not in touched_docs
-    } | delta
-    assert resolved == full
-    # the delta really is localized: docs 6..11, 15..26 never appear
-    assert touched_docs == {0, 1, 2, 3, 4, 5, 12, 13, 14, 27, 28, 29, 40, 41}
-
-
-def test_fold_splits_large_windows(spark, tmp_path, monkeypatch):
-    """VERDICT r13 task 2: a fold sizes its output file count from the
-    source bytes so a folded generation never collapses later readers to
-    one scan split. With a tiny target, both the flat and the
-    hive-partitioned fold paths must emit multiple files and preserve
-    every row."""
-    from clickhouse_provider_spark.streaming import compaction
-
-    monkeypatch.setattr(compaction, "FOLD_TARGET_FILE_BYTES", 4096)
-    flat = str(tmp_path / "flat")
-    for b in range(4):
-        spark.range(b * 2000, (b + 1) * 2000).selectExpr(
-            "id as doc_id", "repeat('x', 40) as text"
-        ).coalesce(1).write.parquet(os.path.join(flat, f"batch_id={b}"))
-    assert compaction.compact_batch_dirs(
-        spark, flat, upto=3, sort_within=["doc_id"], min_dirs=2
-    ) == 4
-    import glob
-
-    gen = os.path.join(flat, "batch_id=3")
-    files = glob.glob(os.path.join(gen, "*.parquet"))
-    assert len(files) > 1, "large window folded into a single file"
-    assert spark.read.parquet(flat).count() == 8000
-
-    hive = str(tmp_path / "hive")
-    for b in range(4):
-        spark.range(b * 2000, (b + 1) * 2000).selectExpr(
-            "id as doc_id", "cast(id % 4 as int) as band_id",
-            "repeat(cast(id as string), 8) as band_hash",
-        ).coalesce(1).write.partitionBy("band_id").parquet(
-            os.path.join(hive, f"batch_id={b}")
-        )
-    assert compaction.compact_batch_dirs(
-        spark, hive, upto=3, partition_by=["band_id"],
-        sort_within=["band_hash"], min_dirs=2,
-    ) == 4
-    per_dir = [
-        len(glob.glob(os.path.join(hive, "batch_id=3", f"band_id={i}",
-                                   "*.parquet")))
-        for i in range(4)
-    ]
-    assert sum(per_dir) > 4, "hive fold kept one file per partition dir"
-    assert spark.read.parquet(hive).count() == 8000
-
-
-def test_fold_rebuilds_band_bloom_via_post_fold(spark, tmp_path):
-    """The curation loop's fold passes write_band_bloom as post_fold: the
-    promoted generation must carry a working sketch (probes keep pruning
-    across folds), pinned by probing the folded index."""
-    from clickhouse_provider_spark.operators import dedup_index as di
-    from clickhouse_provider_spark.streaming import compaction
-
-    path = str(tmp_path / "index")
-    text = " ".join(f"gamma{j}" for j in range(30))
-    b0 = _mini_docs(spark, [(1, text), (2, text)])
-    b1 = _mini_docs(
-        spark,
-        [(10, " ".join(f"delta{j}" for j in range(30)))],
-    )
-    di.lsh_index_append(b0, path, batch_id=0)
-    di.lsh_index_append(b1, path, batch_id=1)
-    assert compaction.compact_batch_dirs(
-        spark, path, upto=1, partition_by=["band_id"],
-        sort_within=["band_hash"],
-        post_fold=lambda d: di.write_band_bloom(spark, d),
-    ) == 2
-    gen = os.path.join(path, "batch_id=1")
-    assert os.path.exists(os.path.join(gen, "_BLOOM.npz"))
-    # a third batch duplicating batch 0's text must find the folded pair
-    keys = di.lsh_index_append(
-        _mini_docs(spark, [(20, text)]), path, batch_id=2
-    )
-    got = {
-        (r["doc_a"], r["doc_b"])
-        for r in di.lsh_new_candidates(
-            spark, path, batch_id=2, new_keys=keys
+        for r in dedup.components_delta(
+            hist, spark.createDataFrame(new, "doc_a long, doc_b long")
         ).collect()
+    ]
+    assert _resolve(labels + delta) == want
+    # the delta really is localized: docs 6..11, 15..26 never appear
+    assert {d for d, _ in delta} == {
+        0, 1, 2, 3, 4, 5, 12, 13, 14, 27, 28, 29, 40, 41,
     }
-    assert got == {(1, 20), (2, 20)}
 
-
-# ---------------- VERDICT r13 task 7: foreachBatch-cadence trigger
-
-
-def test_continuous_stream_rolls_itself_at_boundary(
-    spark, tmp_path, monkeypatch
-):
-    """A single CONTINUOUSLY-running stream (no drain waves) must flag
-    the boundary on the foreachBatch cadence and the continuous driver
-    must roll it mid-stream: trigger log carries per-batch verdicts, the
-    active generation advances, one checkpoint spans the roll (no
-    re-ingestion), and decisions stay exact per generation."""
-    import glob
-    import shutil
-
+    # -- 2: three batches of real documents
     from clickhouse_provider_spark.session import load_tables
 
-    monkeypatch.setattr(sc, "TARGET_CELL_POP", 10)  # threshold 40
-    emb = load_tables(spark, "/root/testdata/sf0.001")["embeddings"].select(
-        "vec_id", "embedding"
+    docs = load_tables(spark, "/root/testdata/sf0.01")["documents"].select(
+        "doc_id", "text"
     )
-    root = str(tmp_path)
-    src = os.path.join(root, "incoming")
-    os.makedirs(src)
-    parts = [
-        emb.filter(F.col("vec_id") < 167),
-        emb.filter((F.col("vec_id") >= 167) & (F.col("vec_id") < 334)),
-        emb.filter(F.col("vec_id") >= 334),
-    ]
-    for i, p in enumerate(parts):
-        d = os.path.join(root, f"stage_{i}")
-        p.coalesce(1).write.parquet(d)
-        f = glob.glob(os.path.join(d, "*.parquet"))[0]
-        shutil.move(f, os.path.join(src, f"batch_{i}.parquet"))
-        shutil.rmtree(d)
-
-    state, log = sc.run_semantic_curation_generations_continuous(
-        spark, src, os.path.join(root, "gens"), os.path.join(root, "ckpt"),
-        threshold=TAU, n_cells=8, max_files_per_trigger=1,
-        idle_timeout=8.0,
+    all_pairs = (
+        dedup.jaccard_pairs(docs, threshold=0.1)
+        .select("doc_a", "doc_b")
+        .localCheckpoint(eager=True)
     )
-    # the trigger fired ON the batch cadence (a per-batch verdict with a
-    # batch_id, inside a running stream — not a between-drain check)
-    fired = [v for v in log if v.get("roll") and "batch_id" in v]
-    assert fired, f"no per-batch trigger fired: {log}"
-    assert state.root.endswith("gen1") or state.root.endswith("gen2")
-    # every ingested vector decided exactly once per its generation
-    total = 0
-    gen_dirs = sorted(
-        d for d in os.listdir(os.path.join(root, "gens"))
-        if d.startswith("gen")
-    )
-    assert len(gen_dirs) >= 2
-    decided = {}
-    for g in gen_dirs:
-        st = sc.SemanticCurationState(
-            os.path.join(root, "gens", g), threshold=TAU
+    history = []  # raw (doc_id, component_id) rows, every batch's writes
+    ingested = None
+    crossed = 0
+    for b in range(3):
+        batch = docs.filter(F.col("doc_id") % 3 == b)
+        ingested = batch if ingested is None else ingested.unionByName(batch)
+        # the batch's new edges: both ends ingested, at least one new
+        a_in = (F.col("doc_a") % 3) <= b
+        b_in = (F.col("doc_b") % 3) <= b
+        touches = ((F.col("doc_a") % 3) == b) | ((F.col("doc_b") % 3) == b)
+        edges = all_pairs.filter(a_in & b_in & touches)
+        crossed += edges.filter((F.col("doc_a") % 3) != (F.col("doc_b") % 3)).count()
+        hist_df = (
+            spark.createDataFrame(history, "doc_id long, component_id long")
+            if history
+            else None
         )
-        dec = st.decisions(spark)
-        if dec is None:
-            continue
-        for r in dec.collect():
-            decided.setdefault(r["vec_id"], set()).add(
-                (g, r["is_dropped"])
-            )
-    # the ACTIVE generation carries every vector exactly once (carried +
-    # its own) — no vector was re-ingested across the roll
-    active = sc.SemanticCurationState(state.root, threshold=TAU)
-    rows = active.decisions(spark).groupBy("vec_id").count().collect()
-    assert len(rows) == emb.count()
-    assert all(r["count"] == 1 for r in rows)
-    # post-roll decisions equal batch SemDeDup over the active gen's
-    # centroids for post-boundary ids (keep-first sees all lower ids)
-    boundary = max(
-        v["batch_id"] for v in log if v.get("roll") and "batch_id" in v
-    )
-    cents = active.centroids(spark)
-    post = {
-        (r["vec_id"], r["is_dropped"])
-        for r in active.decisions(spark)
-        .filter(F.col("batch_id") >= 0)
-        .collect()
-    }
-    want_all = {
-        (r["vec_id"], r["is_dropped"])
-        for r in similarity.semantic_dedup(
-            emb, threshold=TAU, centroids=cents
-        ).collect()
-    }
-    assert post <= want_all
+        delta = dedup.components_delta(hist_df, edges).collect()
+        history += [(r["doc_id"], r["doc_id"]) for r in batch.collect()]
+        history += [(r["doc_id"], r["component_id"]) for r in delta]
+        seen = all_pairs.filter(a_in & b_in)
+        want = {
+            r["doc_id"]: r["survivor_doc_id"]
+            for r in dedup.dedup_survivors(ingested, seen).collect()
+        }
+        assert _resolve(history) == want, f"divergence after batch {b}"
+    assert crossed, "fixture must produce cross-batch merges"

@@ -1,10 +1,9 @@
 """Round-13 equivalence properties (VERDICT r12 task 6): extend the
 thorough-sweep coverage to the Arrow-scan / recurrence operators Sweep A
 did not reach — sequenceNextNode (both directions x both bases), the
-sequence-regex lazy-quantifier translation, LTTB's integer argmax, and
-the retention / decayed-average streaming folds — EACH against an
-independent reference (plain-python ports, Fraction-exact math, or
-set-based recomputation; never the implementation under test).
+sequence-regex lazy-quantifier translation and LTTB's integer argmax —
+EACH against an independent reference (plain-python ports or
+Fraction-exact math; never the implementation under test).
 
 Gate runs use the derandomized default profile at small budgets; the
 recorded exploration runs at PROP_MAX_EXAMPLES=500 live in
@@ -15,7 +14,6 @@ from __future__ import annotations
 
 from fractions import Fraction
 
-import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -25,7 +23,6 @@ from tests.prop_settings import prop_examples
 
 from clickhouse_provider_spark.operators import sequence as SEQ
 from clickhouse_provider_spark.operators.downsample import lttb_select
-from clickhouse_provider_spark.streaming import decay, retention
 
 ALPHABET = "abcd"
 
@@ -109,26 +106,6 @@ def _ref_lttb(xs: list[int], ys: list[int], n_out: int) -> list[int]:
         prev = best[1]
     sel.append(m - 1)
     return sel
-
-
-class _FakeState:
-    """Minimal GroupState stand-in for driving the applyInPandasWithState
-    fold functions directly (exists/get/update are all they touch)."""
-
-    def __init__(self):
-        self._v = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        assert self._v is not None
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
 
 
 # ------------------------------------------------- sequenceNextNode
@@ -253,88 +230,3 @@ def test_lttb_select_vs_fraction_reference(data):
     against a Fraction-exact reference (same tie-break: smallest x)."""
     xs, ys, n_out = data
     assert lttb_select(xs, ys, n_out) == _ref_lttb(xs, ys, n_out)
-
-
-# --------------------------------------------- streaming folds vs truth
-
-
-@st.composite
-def _retention_traffic(draw):
-    days = tuple(draw(st.lists(st.integers(0, 9), min_size=1, max_size=4,
-                               unique=True)))
-    events = draw(st.lists(st.integers(0, 9), min_size=0, max_size=30))
-    # arbitrary micro-batch split points + duplicated chunk redelivery
-    n_batches = draw(st.integers(1, 4))
-    batches = [events[i::n_batches] for i in range(n_batches)]
-    if draw(st.booleans()) and batches:
-        batches.append(list(batches[draw(st.integers(0, len(batches) - 1))]))
-    return days, events, batches
-
-
-@settings(max_examples=prop_examples(50))
-@given(data=_retention_traffic())
-def test_retention_fold_vs_set_reference(data):
-    """The keyed-OR fold is order/split/duplicate-insensitive: final
-    flags equal the set-based recomputation under ANY batching."""
-    days, events, batches = data
-    fold = retention.make_fold(days)
-    state = _FakeState()
-    for b in batches:
-        pdf = pd.DataFrame({"user_id": [7] * len(b), "d": b})
-        list(fold((7,), iter([pdf]), state))
-    want = 0
-    for i, day in enumerate(days):
-        if day in events:
-            want |= 1 << i
-    got = state._v[0] if state._v is not None else 0
-    if not any(len(b) for b in batches):
-        assert state._v is None
-    else:
-        assert got == want
-
-
-@st.composite
-def _decay_traffic(draw):
-    n = draw(st.integers(1, 25))
-    days = sorted(draw(st.lists(st.integers(0, 20), min_size=n, max_size=n)))
-    vals = draw(st.lists(st.integers(0, 1000), min_size=n, max_size=n))
-    # in-order arrival, arbitrary batch boundaries (days stay sorted)
-    cuts = sorted(draw(st.lists(st.integers(0, n), max_size=3)))
-    return days, vals, cuts
-
-
-@settings(max_examples=prop_examples(50))
-@given(data=_decay_traffic())
-def test_decay_fold_vs_fraction_reference(data):
-    """In-order replay of the (W, S) recurrence is BIT-identical to the
-    closed-form decayed average: with integer values and a <=20-day span
-    every intermediate is an exactly-representable dyadic, and both the
-    fold's final division and float(Fraction) are correctly rounded, so
-    they must agree exactly — the module docstring's claim, checked
-    against independent Fraction math."""
-    days, vals, cuts = data
-    rows = list(zip(days, vals))
-    bounds = [0] + cuts + [len(rows)]
-    state = _FakeState()
-    last_emit = None
-    for a, b in zip(bounds, bounds[1:]):
-        chunk = rows[a:b]
-        pdf = pd.DataFrame(
-            {
-                "event_type": ["e"] * len(chunk),
-                "day_idx": [d for d, _ in chunk],
-                "value": [float(v) for _, v in chunk],
-            }
-        )
-        out = list(decay._fold(("e",), iter([pdf]), state))
-        if out:
-            last_emit = out[-1]
-    per_day: dict[int, int] = {}
-    for d, v in rows:
-        per_day[d] = per_day.get(d, 0) + v
-    d0, d = min(per_day), max(per_day)
-    num = sum(x * 2 ** (i - d0) for i, x in per_day.items())
-    want = float(Fraction(num, 2 ** (d - d0 + 1) - 1))
-    assert last_emit is not None
-    assert float(last_emit["ema_halflife_1d"].iloc[0]) == want
-    assert int(last_emit["day_idx"].iloc[0]) == d
