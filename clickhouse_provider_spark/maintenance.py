@@ -10,6 +10,8 @@ Why each exists at 100 TB:
   of small files per partition; scan cost becomes file-open-bound, not
   byte-bound. Compaction rewrites ONLY buckets whose file count exceeds a
   threshold — O(recent buckets), never the table.
+- **Reorg repair**: rolls every table back below a fork height, dropping
+  the buckets above it unread and filtering the one boundary bucket.
 - **Z-order**: a sort on ``(height, ...)`` gives tight parquet min/max
   stats on height only; queries filtering a *secondary* column (account,
   timestamp) still touch every file. Interleaving the bits of both
@@ -20,6 +22,11 @@ Why each exists at 100 TB:
   distinct-count estimates; a sidecar of per-column stats (and
   ``ANALYZE TABLE`` when the table is catalog-registered) feeds it and
   doubles as the pruning manifest for external planners.
+
+Compaction and reorg repair only choose rows; the bucket rewrite itself is
+``storage._replace_buckets``, the one staged swap shared with
+``storage.merge_table`` and ``storage.upsert_table``, and the bucket width
+is the warehouse's ``storage.DEFAULT_BUCKET``.
 """
 
 from __future__ import annotations
@@ -27,17 +34,15 @@ from __future__ import annotations
 import json
 import math
 import os
-import shutil
-import uuid
 from glob import glob
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clickhouse_provider_spark import storage
 from clickhouse_provider_spark.operators import transactions as TX
-from clickhouse_provider_spark.schemas import SORT_KEYS
-from clickhouse_provider_spark.storage import with_skip_indexes
 
+MAX_FILES_PER_BUCKET = 4  # compaction threshold
 TARGET_FILE_BYTES = 128 * 1024 * 1024  # cluster-friendly scan unit
 
 
@@ -62,61 +67,26 @@ def bucket_file_stats(path: str) -> dict[str, dict]:
     return out
 
 
-def compact_table(
-    spark: SparkSession,
-    warehouse: str,
-    name: str,
-    max_files_per_bucket: int = 4,
-    target_file_bytes: int = TARGET_FILE_BYTES,
-) -> dict[str, dict]:
+def compact_table(spark: SparkSession, warehouse: str, name: str) -> dict[str, dict]:
     """Rewrite only the height buckets with more than
-    ``max_files_per_bucket`` part files, each into
-    ``ceil(bytes / target_file_bytes)`` sorted files.
+    ``MAX_FILES_PER_BUCKET`` part files, each into
+    ``ceil(bytes / TARGET_FILE_BYTES)`` sorted files.
 
-    Row-preserving (dedup is :func:`storage.merge_table`'s job); staged
-    per-bucket swap. Staging/backup dirs are underscore-prefixed, which
-    parquet partition discovery ignores, so a crash at any point leaves the
-    table readable: either the original bucket (crash before the final
-    rename pair) or the compacted one. The only non-atomic window is the
-    instant between moving the old bucket aside and renaming the staged
-    replacement in — a crash exactly there leaves the bucket absent, with
-    both copies preserved under ``_old_*`` / ``_staged_*`` for manual
-    recovery (never a half-written or bogus partition). Returns per-bucket
-    before/after stats.
+    Row-preserving (dedup is :func:`storage.merge_table`'s job). Each
+    crowded bucket is swapped in by ``storage._replace_buckets``, so a
+    crash at any point leaves the bucket's original files live or under
+    ``_old_*``. Returns per-bucket before/after stats.
     """
     path = os.path.join(warehouse, name)
-    key = SORT_KEYS[name]
-    stats = bucket_file_stats(path)
-    todo = {b: s for b, s in stats.items() if s["files"] > max_files_per_bucket}
     report = {}
-    for bucket, s in todo.items():
-        bdir = os.path.join(path, bucket)
-        n_out = max(1, math.ceil(s["bytes"] / target_file_bytes))
-        df = spark.read.parquet(bdir)
-        tmp = os.path.join(warehouse, f"_compact_{name}_{uuid.uuid4().hex[:8]}")
-        writer = (
-            df.repartition(n_out)
-            .sortWithinPartitions(*key)
-            .write.mode("overwrite")
-        )
-        with_skip_indexes(writer, name).parquet(tmp)
-        # drop spark's _SUCCESS marker before the swap so the staged dir is
-        # final the moment it's renamed into place
-        marker = os.path.join(tmp, "_SUCCESS")
-        if os.path.exists(marker):
-            os.remove(marker)
-        # stage INSIDE the table dir first (underscore prefix → ignored by
-        # partition discovery), so the final swap is two same-dir renames
-        staged = os.path.join(path, f"_staged_{bucket}_{uuid.uuid4().hex[:8]}")
-        os.rename(tmp, staged)
-        # backup name must NOT match height_bucket=* or discovery would
-        # parse it as a bogus partition value on the next read
-        old = os.path.join(path, f"_old_{bucket}_{uuid.uuid4().hex[:8]}")
-        os.rename(bdir, old)
-        os.rename(staged, bdir)
-        shutil.rmtree(old)
-        after = bucket_file_stats(path)[bucket]
-        report[bucket] = {"before": s, "after": after}
+    for bucket, s in bucket_file_stats(path).items():
+        if s["files"] <= MAX_FILES_PER_BUCKET:
+            continue
+        n_out = max(1, math.ceil(s["bytes"] / TARGET_FILE_BYTES))
+        rows = spark.read.option("basePath", path).parquet(os.path.join(path, bucket))
+        b = int(bucket.rsplit("=", 1)[1])
+        storage._replace_buckets(spark, warehouse, name, rows.repartition(n_out), [b])
+        report[bucket] = {"before": s, "after": bucket_file_stats(path)[bucket]}
     return report
 
 
@@ -130,7 +100,6 @@ def reorg_repair(
     warehouse: str,
     fork_height: int,
     tables: list[str] | None = None,
-    bucket_size: int | None = None,
 ) -> dict[str, dict]:
     """Roll every table back to the state strictly below ``fork_height``.
 
@@ -148,62 +117,40 @@ def reorg_repair(
     100 TB shape: height-bucket partitioning makes this O(affected
     buckets), never a table scan —
 
-    - buckets fully above the fork are dropped by directory rename (no
-      read; dropped-row counts come from parquet footers),
-    - the single boundary bucket is filtered and atomically swapped
-      (same staged/backup protocol as :func:`compact_table`),
+    - buckets fully above the fork are dropped unread (dropped-row counts
+      come from parquet footers),
+    - the single boundary bucket is filtered and swapped in; a fork on a
+      bucket edge leaves no boundary bucket, and a boundary bucket with
+      no surviving rows is dropped — both through the one staged swap,
+      ``storage._replace_buckets``,
     - buckets below the fork are untouched (their files keep their
       inodes — asserted in tests/test_maintenance.py).
 
     Returns per-table ``{"rows_dropped", "buckets_dropped",
     "buckets_rewritten"}``.
     """
-    from clickhouse_provider_spark.storage import DEFAULT_BUCKET, PARTITION_HEIGHT
-
-    bucket_size = bucket_size or DEFAULT_BUCKET
-    fork_bucket = fork_height // bucket_size
+    fork_bucket = fork_height // storage.DEFAULT_BUCKET
     report = {}
-    for name in tables or list(PARTITION_HEIGHT):
+    for name in tables or list(storage.PARTITION_HEIGHT):
         path = os.path.join(warehouse, name)
         if not os.path.isdir(path):
             continue
-        height_col = PARTITION_HEIGHT[name]
-        key = SORT_KEYS[name]
-        rows_dropped = buckets_dropped = buckets_rewritten = 0
-        for bdir in sorted(glob(os.path.join(path, "height_bucket=*"))):
-            b = int(bdir.rsplit("=", 1)[1])
-            if b < fork_bucket:
-                continue  # entirely below the fork: untouched
-            # a fork exactly on a bucket edge means the edge bucket holds
-            # no surviving rows — rename-drop it, don't rewrite-to-empty
-            if b > fork_bucket or fork_height % bucket_size == 0:
-                rows_dropped += _footer_rows(bdir)
-                old = os.path.join(path, f"_reorged_{b}_{uuid.uuid4().hex[:8]}")
-                os.rename(bdir, old)
-                shutil.rmtree(old)
-                buckets_dropped += 1
-                continue
-            # boundary bucket: keep rows strictly below the fork
-            before = _footer_rows(bdir)
-            kept = spark.read.parquet(bdir).filter(F.col(height_col) < fork_height)
-            tmp = os.path.join(warehouse, f"_reorg_{name}_{uuid.uuid4().hex[:8]}")
-            writer = kept.sortWithinPartitions(*key).write.mode("overwrite")
-            with_skip_indexes(writer, name).parquet(tmp)
-            marker = os.path.join(tmp, "_SUCCESS")
-            if os.path.exists(marker):
-                os.remove(marker)
-            staged = os.path.join(path, f"_staged_{b}_{uuid.uuid4().hex[:8]}")
-            os.rename(tmp, staged)
-            old = os.path.join(path, f"_old_{b}_{uuid.uuid4().hex[:8]}")
-            os.rename(bdir, old)
-            os.rename(staged, bdir)
-            shutil.rmtree(old)
-            rows_dropped += before - _footer_rows(bdir)
-            buckets_rewritten += 1
+        live = storage.live_buckets(path)
+        doomed = sorted(b for b in live if b >= fork_bucket)
+        before = sum(_footer_rows(live[b]) for b in doomed)
+        kept = None
+        if fork_height % storage.DEFAULT_BUCKET and fork_bucket in live:
+            kept = (
+                spark.read.option("basePath", path)
+                .parquet(live[fork_bucket])
+                .filter(F.col(storage.PARTITION_HEIGHT[name]) < fork_height)
+            )
+        storage._replace_buckets(spark, warehouse, name, kept, doomed)
+        rewritten = [b for b in doomed if os.path.isdir(live[b])]
         report[name] = {
-            "rows_dropped": rows_dropped,
-            "buckets_dropped": buckets_dropped,
-            "buckets_rewritten": buckets_rewritten,
+            "rows_dropped": before - sum(_footer_rows(live[b]) for b in rewritten),
+            "buckets_dropped": len(doomed) - len(rewritten),
+            "buckets_rewritten": len(rewritten),
         }
     return report
 
@@ -220,8 +167,6 @@ def detect_fork(
     The minimum of ``operators.transactions.link_violations`` over the
     stored blocks table: its bucketed two-phase check runs against the
     full table at any scale, and a missing height surfaces too."""
-    from clickhouse_provider_spark import storage
-
     links = storage.read_table(spark, warehouse, "blocks").select(
         "block_height", "block_hash", F.col("prev_block_hash").alias("prev_hash")
     )
@@ -297,7 +242,6 @@ def write_zordered(
     path: str,
     cols: list[str],
     num_files: int,
-    bits: int = 8,
     bloom_cols: list[str] | None = None,
 ) -> dict[str, tuple[float, float]]:
     """Write ``df`` as ``num_files`` files range-partitioned and sorted by
@@ -313,7 +257,7 @@ def write_zordered(
                  F.max(F.col(c).cast("double")).alias(f"__max_{c}")]
     row = df.agg(*aggs).collect()[0]
     bounds = {c: (row[f"__min_{c}"], row[f"__max_{c}"]) for c in cols}
-    z = zorder_key(cols, bounds, bits=bits)
+    z = zorder_key(cols, bounds)
     writer = (
         df.withColumn("__z", z)
         # rangeExchange on __z: each output file owns a contiguous Z range
@@ -323,7 +267,7 @@ def write_zordered(
         .drop("__z")
         .write.mode("overwrite")
     )
-    with_skip_indexes(writer, bloom_cols).parquet(path)
+    storage.with_skip_indexes(writer, bloom_cols).parquet(path)
     return bounds
 
 
@@ -370,12 +314,7 @@ def files_overlapping(path: str, col: str, lo, hi) -> tuple[int, int]:
 # ---------------------------------------------------------------------------
 
 
-def analyze_table(
-    spark: SparkSession,
-    warehouse: str,
-    name: str,
-    columns: list[str] | None = None,
-) -> dict:
+def analyze_table(spark: SparkSession, warehouse: str, name: str) -> dict:
     """Compute table + per-column stats and persist them as a
     ``_stats.json`` sidecar next to the data (the parquet-dir analog of
     ``ANALYZE TABLE ... COMPUTE STATISTICS FOR COLUMNS``).
@@ -388,7 +327,7 @@ def analyze_table(
     """
     path = os.path.join(warehouse, name)
     df = spark.read.parquet(path)
-    cols = columns or [
+    cols = [
         f.name
         for f in df.schema.fields
         if f.name != "height_bucket"

@@ -23,6 +23,13 @@ Mapping of each storage-level mechanism:
 A table's schema is kept once in a ``_schema.json`` sidecar, so a table
 written only from empty frames (no parquet files) still reads, as empty.
 
+The bucket width is a property of the warehouse, not of a call: every
+writer and rewriter stamps ``height_bucket`` through
+:func:`with_height_bucket`, which reads ``DEFAULT_BUCKET`` when it runs.
+Every rewrite of existing buckets (:func:`merge_table`,
+:func:`upsert_table`, and ``maintenance.compact_table`` /
+``reorg_repair``) goes through one staged swap, :func:`_replace_buckets`.
+
 At 100 TB: bucket size keeps per-partition data at file-count sanity;
 writes of a height range touch only their buckets, and the dedup view's
 window shuffles only within identical sort keys (replay overlap), never
@@ -33,7 +40,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
+from glob import glob
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
@@ -92,20 +101,21 @@ def with_skip_indexes(
     return writer
 
 
-def write_table(
-    df: DataFrame,
-    warehouse: str,
-    name: str,
-    mode: str = "append",
-    bucket_size: int = DEFAULT_BUCKET,
-) -> str:
+def with_height_bucket(df: DataFrame, name: str) -> DataFrame:
+    """``df`` with the ``height_bucket`` partition column of table
+    ``name``: its partition height divided by ``DEFAULT_BUCKET``."""
+    return df.withColumn(
+        "height_bucket", (F.col(PARTITION_HEIGHT[name]) / DEFAULT_BUCKET).cast("long")
+    )
+
+
+def write_table(df: DataFrame, warehouse: str, name: str, mode: str = "append") -> str:
     """Append rows in MergeTree-like layout. Idempotency comes from the
     dedup-on-read view, not the write (matching the reference: re-inserts
     during catch-up are absorbed by ReplacingMergeTree merges)."""
     path = os.path.join(warehouse, name)
-    height_col = PARTITION_HEIGHT[name]
     writer = (
-        df.withColumn("height_bucket", (F.col(height_col) / bucket_size).cast("long"))
+        with_height_bucket(df, name)
         .sortWithinPartitions(*SORT_KEYS[name])
         .write.mode(mode)
         .partitionBy("height_bucket")
@@ -159,12 +169,66 @@ def read_table(spark: SparkSession, warehouse: str, name: str) -> DataFrame:
     )
 
 
-def merge_table(
+def live_buckets(path: str) -> dict[int, str]:
+    """The table's ``height_bucket=N`` partition dirs, by bucket number."""
+    return {
+        int(d.rsplit("=", 1)[1]): d
+        for d in glob(os.path.join(path, "height_bucket=*"))
+        if os.path.isdir(d)
+    }
+
+
+def _replace_buckets(
     spark: SparkSession,
     warehouse: str,
     name: str,
-    bucket_size: int = DEFAULT_BUCKET,
-) -> int:
+    rows: DataFrame | None,
+    buckets: list[int],
+) -> None:
+    """Replace the listed buckets of table ``name`` with ``rows``: the one
+    staged swap behind every bucket rewrite.
+
+    ``rows`` carries ``height_bucket`` and is already partitioned the way
+    the caller wants its files. It is sorted by the table's sort key and
+    written once to a ``_``-prefixed staging dir inside the table dir,
+    which parquet partition discovery skips. Then each listed bucket is
+    swapped in by two same-dir renames: the live bucket to ``_old_<b>_*``,
+    the staged one to ``height_bucket=<b>``. A listed bucket with no
+    staged rows (or ``rows`` None) is dropped. Backups are removed only
+    after every bucket is in place, so a crash at any point leaves each
+    bucket's original files either live or under ``_old_*`` — never
+    deleted before their replacement is in place. Staged rows outside
+    ``buckets`` raise before any live bucket is touched."""
+    path = os.path.join(warehouse, name)
+    tag = uuid.uuid4().hex[:8]
+    staging = os.path.join(path, f"_staging_{tag}")
+    if rows is not None:
+        writer = (
+            rows.sortWithinPartitions("height_bucket", *SORT_KEYS[name])
+            .write.mode("overwrite")
+            .partitionBy("height_bucket")
+        )
+        with_skip_indexes(writer, name).parquet(staging)
+        _record_schema(rows.drop("height_bucket"), path)
+    staged = live_buckets(staging)
+    stray = sorted(set(staged) - set(buckets))
+    if stray:
+        shutil.rmtree(staging)
+        raise ValueError(f"{name}: rows staged for unlisted buckets {stray}")
+    old = []
+    for b in buckets:
+        live = os.path.join(path, f"height_bucket={b}")
+        if os.path.isdir(live):
+            old.append(os.path.join(path, f"_old_{b}_{tag}"))
+            os.rename(live, old[-1])
+        if b in staged:
+            os.rename(staged[b], live)
+    for d in old:
+        shutil.rmtree(d)
+    shutil.rmtree(staging, ignore_errors=True)
+
+
+def merge_table(spark: SparkSession, warehouse: str, name: str) -> int:
     """The MergeTree background-merge analog (OPTIMIZE FINAL): physically
     collapse sort-key duplicates and re-sort/compact each height bucket,
     so dedup-on-read becomes a no-op and small replay files disappear.
@@ -174,95 +238,47 @@ def merge_table(
     like MergeTree merging recent parts; here the testable core is the
     full rewrite. Returns the number of physically removed duplicate rows.
 
-    The rewrite is staged through a temp dir then swapped — readers never
-    observe a half-written table and a crashed merge leaves the original.
+    Every bucket goes through :func:`_replace_buckets`, so readers never
+    observe a half-written bucket and a crashed merge keeps every original
+    file, live or under ``_old_*``.
     """
-    import shutil
-
     path = os.path.join(warehouse, name)
     before = _scan(spark, path).count()
-    merged = read_table(spark, warehouse, name)
-    tmp = os.path.join(warehouse, f"_merge_{name}_{uuid.uuid4().hex[:8]}")
-    height_col = PARTITION_HEIGHT[name]
-    writer = (
-        merged.withColumn("height_bucket", (F.col(height_col) / bucket_size).cast("long"))
-        .repartition("height_bucket")
-        .sortWithinPartitions(*SORT_KEYS[name])
-        .write.mode("overwrite")
-        .partitionBy("height_bucket")
+    merged = with_height_bucket(read_table(spark, warehouse, name), name)
+    _replace_buckets(
+        spark, warehouse, name, merged.repartition("height_bucket"), list(live_buckets(path))
     )
-    with_skip_indexes(writer, name).parquet(tmp)
-    _record_schema(merged, tmp)
-    after = _scan(spark, tmp).count()
-    old = path + ".old"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return before - after
+    return before - _scan(spark, path).count()
 
 
-def upsert_table(
-    spark: SparkSession,
-    warehouse: str,
-    name: str,
-    new_rows: DataFrame,
-    bucket_size: int = DEFAULT_BUCKET,
-) -> None:
+def upsert_table(spark: SparkSession, warehouse: str, name: str, new_rows: DataFrame) -> None:
     """Partition-scoped MERGE: last-write-wins upsert keyed on the sort
     key, rewriting ONLY the height buckets the incoming rows touch.
 
     This is the Delta-MERGE analog on plain parquet: at 100 TB an ingest
     batch touches a handful of recent buckets, so the rewrite cost is
     O(batch's bucket span), never the table. New rows win over stored rows
-    on sort-key collisions (ReplacingMergeTree "latest version" rule).
+    on sort-key collisions (ReplacingMergeTree "latest version" rule). The
+    touched buckets are swapped in by :func:`_replace_buckets`.
     """
-    import shutil
-
-    height_col = PARTITION_HEIGHT[name]
-    key = SORT_KEYS[name]
     path = os.path.join(warehouse, name)
-    stamped = new_rows.withColumn(
-        "height_bucket", (F.col(height_col) / bucket_size).cast("long")
-    )
+    stamped = with_height_bucket(new_rows, name).withColumn("__pref", F.lit(0))
     buckets = [r["height_bucket"] for r in stamped.select("height_bucket").distinct().collect()]
     if not buckets:
         return
-    existing_paths = [
-        p for b in buckets if os.path.exists(p := os.path.join(path, f"height_bucket={b}"))
-    ]
-    new_pref = stamped.withColumn("__pref", F.lit(0))
-    if existing_paths:
-        old = (
-            spark.read.option("basePath", path)
-            .parquet(*existing_paths)
-            .withColumn("__pref", F.lit(1))
-        )
-        merged = new_pref.unionByName(old)
-    else:
-        merged = new_pref
-    w = W.partitionBy(*key).orderBy("__pref")  # new rows (pref 0) win
-    winner = (
+    live = live_buckets(path)
+    touched = [live[b] for b in buckets if b in live]
+    merged = stamped
+    if touched:
+        old = spark.read.option("basePath", path).parquet(*touched)
+        merged = stamped.unionByName(old.withColumn("__pref", F.lit(1)))
+    w = W.partitionBy(*SORT_KEYS[name]).orderBy("__pref")  # new rows (pref 0) win
+    winners = (
         merged.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn", "__pref")
     )
-    tmp = os.path.join(warehouse, f"_upsert_{name}_{uuid.uuid4().hex[:8]}")
-    writer = (
-        winner.repartition("height_bucket")
-        .sortWithinPartitions(*key)
-        .write.mode("overwrite")
-        .partitionBy("height_bucket")
-    )
-    with_skip_indexes(writer, name).parquet(tmp)
-    _record_schema(new_rows, path)  # first write: creates the table root
-    for b in buckets:
-        dst = os.path.join(path, f"height_bucket={b}")
-        src = os.path.join(tmp, f"height_bucket={b}")
-        if os.path.exists(dst):
-            shutil.rmtree(dst)
-        if os.path.exists(src):
-            os.rename(src, dst)
-    shutil.rmtree(tmp, ignore_errors=True)
+    _replace_buckets(spark, warehouse, name, winners.repartition("height_bucket"), buckets)
 
 
 def ingest_batch(blocks: DataFrame, warehouse: str, mode: str = "append") -> dict[str, str]:

@@ -1,5 +1,7 @@
-"""Maintenance jobs: small-file compaction (bucket-scoped), Z-order layout
-(multi-column file pruning), and the ANALYZE-analog stats sidecar."""
+"""Maintenance jobs: small-file compaction (bucket-scoped), reorg repair,
+Z-order layout (multi-column file pruning), the ANALYZE-analog stats
+sidecar, and the bucket swap every rewrite shares. Multi-bucket tables
+narrow ``storage.DEFAULT_BUCKET`` with ``monkeypatch``."""
 
 import glob
 import os
@@ -96,9 +98,10 @@ def test_zorder_preserves_rows(spark, tmp_path):
 
 
 @pytest.fixture()
-def multi_bucket_wh(spark, tmp_path_factory):
-    """A blocks table spanning 3 height buckets (small bucket_size) so the
+def multi_bucket_wh(spark, tmp_path_factory, monkeypatch):
+    """A blocks table spanning 3 height buckets (10-block buckets) so the
     repair exercises drop-whole-bucket, rewrite-boundary, and untouched."""
+    monkeypatch.setattr(storage, "DEFAULT_BUCKET", 10)
     wh = str(tmp_path_factory.mktemp("reorg_wh"))
     rows = [
         (h, f"Hash{h}", f"Hash{h-1}", 1_700_000_000_000_000_000 + h)
@@ -107,7 +110,7 @@ def multi_bucket_wh(spark, tmp_path_factory):
     df = spark.createDataFrame(
         rows, "block_height long, block_hash string, prev_block_hash string, block_timestamp long"
     )
-    storage.write_table(df, wh, "blocks", bucket_size=10)
+    storage.write_table(df, wh, "blocks")
     return wh
 
 
@@ -116,7 +119,7 @@ def test_reorg_repair_partition_pruned_rollback(spark, multi_bucket_wh):
     path = f"{wh}/blocks"
     untouched = sorted(glob.glob(f"{path}/height_bucket=10/*.parquet"))
     inodes_before = [os.stat(f).st_ino for f in untouched]
-    report = maintenance.reorg_repair(spark, wh, fork_height=115, bucket_size=10)
+    report = maintenance.reorg_repair(spark, wh, fork_height=115)
     r = report["blocks"]
     # heights 100-114 survive, 115-129 dropped
     left = spark.read.parquet(path)
@@ -139,7 +142,7 @@ def test_reorg_repair_then_reingest_is_canonical(spark, multi_bucket_wh):
     """Orphaned rows that ReplacingMergeTree-style dedup could never expel
     (sort key unique to the dead fork) are gone after repair + re-ingest."""
     wh = multi_bucket_wh
-    maintenance.reorg_repair(spark, wh, fork_height=115, bucket_size=10)
+    maintenance.reorg_repair(spark, wh, fork_height=115)
     # canonical chain rewrites 115+ with different hashes
     rows = [
         (h, f"Canon{h}", f"Canon{h-1}", 1_700_000_000_000_000_000 + h)
@@ -152,7 +155,6 @@ def test_reorg_repair_then_reingest_is_canonical(spark, multi_bucket_wh):
         ),
         wh,
         "blocks",
-        bucket_size=10,
     )
     view = storage.read_table(spark, wh, "blocks")
     assert view.count() == 30
@@ -167,7 +169,7 @@ def test_reorg_repair_fork_on_bucket_edge_drops_whole_bucket(
     surviving rows, so it must be rename-dropped, not rewritten to an
     empty directory."""
     wh = multi_bucket_wh
-    report = maintenance.reorg_repair(spark, wh, fork_height=120, bucket_size=10)
+    report = maintenance.reorg_repair(spark, wh, fork_height=120)
     r = report["blocks"]
     assert r["buckets_dropped"] == 1 and r["buckets_rewritten"] == 0
     assert r["rows_dropped"] == 10
@@ -179,7 +181,7 @@ def test_reorg_repair_fork_on_bucket_edge_drops_whole_bucket(
 
 
 def test_detect_fork_finds_lowest_violation_and_repair_clears_it(
-    spark, tmp_path_factory
+    spark, tmp_path_factory, monkeypatch
 ):
     """Detection half of the reorg story: a consistent chain reports None;
     after a fork (blocks 115+ replaced by an orphan branch whose first
@@ -196,11 +198,10 @@ def test_detect_fork_finds_lowest_violation_and_repair_clears_it(
         for h in range(115, 125)
     ]
     schema = "block_height long, block_hash string, prev_block_hash string, block_timestamp long"
-    storage.write_table(
-        spark.createDataFrame(good + orphan, schema), wh, "blocks", bucket_size=10
-    )
+    monkeypatch.setattr(storage, "DEFAULT_BUCKET", 10)
+    storage.write_table(spark.createDataFrame(good + orphan, schema), wh, "blocks")
     assert maintenance.detect_fork(spark, wh, bucket=10) == 115
-    maintenance.reorg_repair(spark, wh, fork_height=115, bucket_size=10)
+    maintenance.reorg_repair(spark, wh, fork_height=115)
     assert maintenance.detect_fork(spark, wh, bucket=10) is None
     # boundary case: violation exactly at a bucket edge (120) is seen by
     # the boundary lag, not the within-bucket one
@@ -209,7 +210,7 @@ def test_detect_fork_finds_lowest_violation_and_repair_clears_it(
         (h, f"Hash{h}", f"Hash{h-1}" if h != 120 else "HashDEAD", 0)
         for h in range(100, 130)
     ]
-    storage.write_table(spark.createDataFrame(rows, schema), wh2, "blocks", bucket_size=10)
+    storage.write_table(spark.createDataFrame(rows, schema), wh2, "blocks")
     assert maintenance.detect_fork(spark, wh2, bucket=10) == 120
     # the same break through the pure within-bucket path (one bucket)
     assert maintenance.detect_fork(spark, wh2) == 120
@@ -217,7 +218,7 @@ def test_detect_fork_finds_lowest_violation_and_repair_clears_it(
     # at 121, whose prev_hash names a block the table does not hold
     wh3 = str(tmp_path_factory.mktemp("fork_wh3"))
     gap = [(h, f"Hash{h}", f"Hash{h-1}", 0) for h in range(100, 130) if h != 120]
-    storage.write_table(spark.createDataFrame(gap, schema), wh3, "blocks", bucket_size=10)
+    storage.write_table(spark.createDataFrame(gap, schema), wh3, "blocks")
     assert maintenance.detect_fork(spark, wh3, bucket=10) == 121
 
 
@@ -243,3 +244,56 @@ def test_files_overlapping_string_stats(spark, tmp_path):
     assert (hit, total) == (1, 1)
     hit, total = maintenance.files_overlapping(p, "name", "x", "z")
     assert (hit, total) == (0, 1)
+
+
+def _blocks_frame(spark, heights, tag="Hash"):
+    return spark.createDataFrame(
+        [(h, f"{tag}{h}", f"{tag}{h-1}", 1_700_000_000_000_000_000 + h) for h in heights],
+        "block_height long, block_hash string, prev_block_hash string, block_timestamp long",
+    )
+
+
+#: every bucket rewrite, over the 100-129 blocks table below
+REWRITES = {
+    "merge": lambda spark, wh: storage.merge_table(spark, wh, "blocks"),
+    "upsert": lambda spark, wh: storage.upsert_table(
+        spark, wh, "blocks", _blocks_frame(spark, range(110, 115), tag="New")
+    ),
+    "compact": lambda spark, wh: maintenance.compact_table(spark, wh, "blocks"),
+    "reorg": lambda spark, wh: maintenance.reorg_repair(spark, wh, fork_height=115),
+}
+
+
+@pytest.mark.parametrize("rewrite", sorted(REWRITES))
+def test_failed_swap_keeps_every_original_file(spark, tmp_path, monkeypatch, rewrite):
+    """A failure while a staged bucket is renamed into place raises and
+    loses no stored row: the table dir stays, and every original parquet
+    file is still in its live bucket or in an ``_old_*`` backup."""
+    monkeypatch.setattr(storage, "DEFAULT_BUCKET", 10)
+    wh = str(tmp_path)
+    table = os.path.join(wh, "blocks")
+    # five appends: duplicates for merge, more than four files per bucket
+    # for compact
+    for _ in range(5):
+        storage.write_table(_blocks_frame(spark, range(100, 130)), wh, "blocks")
+    originals = {os.path.basename(f) for f in glob.glob(f"{table}/height_bucket=*/*.parquet")}
+    assert originals
+
+    rename = os.rename
+
+    def fail_into_live(src, dst):
+        if os.path.basename(dst).startswith("height_bucket=") or dst == table:
+            raise OSError(f"injected: {src} -> {dst}")
+        return rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", fail_into_live)
+    with pytest.raises(OSError, match="injected"):
+        REWRITES[rewrite](spark, wh)
+    monkeypatch.setattr(os, "rename", rename)
+    assert os.path.isdir(table)
+    kept = {
+        os.path.basename(f)
+        for pattern in ("height_bucket=*", "_old_*")
+        for f in glob.glob(f"{table}/{pattern}/*.parquet")
+    }
+    assert originals <= kept, sorted(originals - kept)

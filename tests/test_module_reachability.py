@@ -1,5 +1,5 @@
-"""Every module under ``streaming/`` and ``operators/`` must be reachable
-by static imports from the package's public entry points. A module that
+"""Every module of the package must be reachable by static imports from
+its public entry points. A module that
 only its own tests import is dead code with a second test suite; this
 guard fails as soon as one appears. It parses source files with ``ast``
 and never imports them, so it needs no JVM. The package uses absolute
@@ -13,10 +13,12 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 PKG = "clickhouse_provider_spark"
 
-#: The public surface: the serving catalog, the streaming daemons, the
-#: storage/sink/maintenance layers, the block sources and the bench CLI.
+#: The public surface: the serving catalog, the explorer API, the
+#: streaming daemons, the storage/sink/maintenance layers, the block
+#: sources and the bench CLI.
 ENTRY_MODULES = (
     f"{PKG}.plans",
+    f"{PKG}.plans.serving",
     f"{PKG}.streaming",
     f"{PKG}.storage",
     f"{PKG}.sinks",
@@ -24,7 +26,6 @@ ENTRY_MODULES = (
     f"{PKG}.sources",
 )
 ENTRY_FILES = (ROOT / "bench.py",)
-GUARDED = (f"{PKG}.streaming", f"{PKG}.operators")
 
 
 def _module_path(name: str) -> Path | None:
@@ -65,17 +66,17 @@ def reachable() -> set[str]:
     return seen
 
 
-def guarded_modules() -> set[str]:
+def package_modules() -> set[str]:
     mods = set()
-    for pkg in GUARDED:
-        for f in ROOT.joinpath(*pkg.split(".")).glob("*.py"):
-            mods.add(pkg if f.name == "__init__.py" else f"{pkg}.{f.stem}")
+    for f in ROOT.joinpath(PKG).rglob("*.py"):
+        parts = f.relative_to(ROOT).with_suffix("").parts
+        mods.add(".".join(parts[:-1] if parts[-1] == "__init__" else parts))
     return mods
 
 
 def test_every_streaming_and_operator_module_is_reachable():
-    unreached = sorted(guarded_modules() - reachable())
+    """Every module of the package is imported from an entry point."""
+    unreached = sorted(m.removeprefix(f"{PKG}.") for m in package_modules() - reachable())
     assert not unreached, (
-        f"{len(unreached)} module(s) under streaming/ or operators/ are "
-        f"imported by no entry point: {unreached}"
+        f"{len(unreached)} package module(s) are imported by no entry point: {unreached}"
     )

@@ -76,7 +76,7 @@ def test_merge_collapses_duplicates(spark, blocks, warehouse):
     assert view.orderBy("block_height").collect() == before_view
 
 
-def test_upsert_partition_scoped(spark, blocks, tmp_path_factory):
+def test_upsert_partition_scoped(spark, blocks, tmp_path_factory, monkeypatch):
     """MERGE analog: updated rows replace same-key rows, only touched
     buckets rewritten, untouched buckets byte-identical."""
     from pyspark.sql import functions as F
@@ -93,7 +93,8 @@ def test_upsert_partition_scoped(spark, blocks, tmp_path_factory):
     import shutil
 
     shutil.rmtree(f"{wh}/blocks")
-    storage.write_table(raw, wh, "blocks", mode="overwrite", bucket_size=2)
+    monkeypatch.setattr(storage, "DEFAULT_BUCKET", 2)
+    storage.write_table(raw, wh, "blocks", mode="overwrite")
     untouched_dir = f"{wh}/blocks/height_bucket=50"  # heights 100-101
     before_files = sorted(
         p.name for p in __import__("pathlib").Path(untouched_dir).glob("*.parquet")
@@ -105,7 +106,7 @@ def test_upsert_partition_scoped(spark, blocks, tmp_path_factory):
     new = raw.filter(F.col("block_height") == 104).withColumn(
         "block_height", F.lit(105).cast("long")
     )
-    storage.upsert_table(spark, wh, "blocks", updated.unionByName(new), bucket_size=2)
+    storage.upsert_table(spark, wh, "blocks", updated.unionByName(new))
     view = storage.read_table(spark, wh, "blocks")
     assert view.count() == 6  # 100..105, no duplicate 104
     assert view.filter(F.col("block_height") == 104).first()["author_id"] == "replacement.near"
@@ -126,14 +127,15 @@ def test_pruned_range_scan(spark, warehouse):
     assert "block_height" in plan.split("PushedFilters")[1][:200]
 
 
-def test_upsert_into_nonexistent_table(spark, blocks, tmp_path_factory):
+def test_upsert_into_nonexistent_table(spark, blocks, tmp_path_factory, monkeypatch):
     """First-ever write through upsert_table: the table root doesn't exist
     yet — the bucket swap must create it instead of FileNotFoundError."""
     from clickhouse_provider_spark.operators.transactions import block_rows
 
     wh = str(tmp_path_factory.mktemp("upsert_fresh_wh"))
     rows = block_rows(blocks)
-    storage.upsert_table(spark, wh, "blocks", rows, bucket_size=2)
+    monkeypatch.setattr(storage, "DEFAULT_BUCKET", 2)
+    storage.upsert_table(spark, wh, "blocks", rows)
     got = storage.read_table(spark, wh, "blocks")
     assert got.count() == 5
     assert {r["block_height"] for r in got.select("block_height").collect()} == {100, 101, 102, 103, 104}

@@ -3,9 +3,10 @@
 Usage: python -u -i tools/devshell.py [sf_dir]
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

@@ -5,11 +5,10 @@ with an order-insensitive value-hash compare (the driver's t1+t2 shape).
 
 import hashlib
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-
-import os
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 from pyspark.sql import SparkSession

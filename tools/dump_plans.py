@@ -3,9 +3,11 @@ PLANS.md — a reviewable artifact of what Catalyst actually compiles
 (pushdown, broadcast choices, exchange counts) without running Spark.
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bench import HEADLINE
 from clickhouse_provider_spark.plans import CATALOG
@@ -29,7 +31,7 @@ def main() -> None:
         )
         tree = plan.split("\n\n")[0]  # the operator tree, not per-node detail
         out += [f"## {name}", "", f"_{CATALOG[name].doc}_", "", "```", tree, "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(HEADLINE)} plans)")
 

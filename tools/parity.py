@@ -9,6 +9,7 @@ order-insensitive canonical form of all values. Stricter than the driver
 from __future__ import annotations
 
 import math
+import os
 import sys
 from datetime import date, datetime
 
@@ -98,7 +99,7 @@ def compare(spark_df: pd.DataFrame, oracle_df: pd.DataFrame) -> list[str]:
 
 
 def run_parity(names=None, sf_dir="/root/testdata/sf0.01", spark=None, con=None, verbose=True):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from clickhouse_provider_spark.plans import CATALOG
     from clickhouse_provider_spark.session import get_spark, load_tables
 
